@@ -118,12 +118,6 @@ def exact_sum(col: str | Column, scale: int = 2) -> Column:
     return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
 
 
-def exact_avg(col: str | Column, scale: int = 6) -> Column:
-    """Order-independent AVG via an exact decimal sum (see exact_sum)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double") / F.count(c)
-
-
 def null_safe_div(num: Column, den: Column) -> Column:
     """num/den with NULL (not error, not Inf) on a zero denominator."""
     return F.when(den != 0, num / den)
@@ -151,7 +145,6 @@ __all__ = (
     + [
         "FAMILIES",
         "exact_sum",
-        "exact_avg",
         "null_safe_div",
         "epoch_bucket",
         "bucketed",

@@ -62,12 +62,17 @@ def register_session_cache(cache: dict, cleanup=None) -> dict:
 
 def sweep_session_caches(live_app_id: str) -> int:
     """Evict entries of every registered cache whose app id is not
-    ``live_app_id``.  Returns the number of entries evicted."""
+    ``live_app_id``.  Only tuple keys carry an app id; any other key is
+    left alone.  Returns the number of entries evicted."""
     n = 0
     with _SESSION_CACHE_LOCK:
         snapshot = list(_SESSION_CACHES)
     for cache, cleanup in snapshot:
-        for key in [k for k in list(cache) if k and k[0] != live_app_id]:
+        dead = [
+            k for k in list(cache)
+            if isinstance(k, tuple) and k and k[0] != live_app_id
+        ]
+        for key in dead:
             try:
                 value = cache.pop(key)
             except KeyError:

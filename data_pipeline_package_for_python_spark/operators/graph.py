@@ -257,9 +257,11 @@ def _broadcast_if_fits(frame: DataFrame, n_rows: int, bytes_per_row: int = 32):
     broadcast (each round = one broadcast + the one fundamental
     aggregation shuffle, guide §2.4/§3.1); above it — the 100 TB graph,
     where |V| itself is beyond any broadcast — the hint is withheld and
-    the round keeps the shuffle-join shape.  Same policy knob and
-    decline-at-scale semantics as the relational tier's
-    ``_orders_side_fits_broadcast``."""
+    the round keeps the shuffle-join shape.  This is Catalyst's own
+    broadcast-by-size rule, restated only because the planner's
+    estimate is unusable here: the relational tier's fact edges join
+    plain scans, whose size Catalyst prices itself against the same
+    threshold, and carry no such hint."""
     from .. import plans
 
     thr = plans.broadcast_threshold_bytes(frame.sparkSession)

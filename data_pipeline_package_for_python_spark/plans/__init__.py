@@ -34,7 +34,6 @@ __all__ = [
     "PlanReport",
     "PreparedQuery",
     "broadcast_threshold_bytes",
-    "estimated_size_bytes",
     "formatted_plan",
     "plan_report",
     "prepare",
@@ -75,20 +74,6 @@ def _explain_string(df: DataFrame, mode: str) -> str:
     return jdf.queryExecution().explainString(jmode)
 
 
-def estimated_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for ``df``'s optimized plan, in bytes.
-
-    A pure planner-side py4j call — no job runs.  Without CBO the
-    estimate degrades conservatively (scan = file size; joins inflate
-    multiplicatively), which is the right failure direction for gating
-    optimizations that must never fire on big data: an inflated
-    estimate declines the optimization, it never green-lights a 100 TB
-    broadcast."""
-    return int(
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()  # noqa: SLF001
-    )
-
-
 def partitions_scanned(df: DataFrame) -> int | None:
     """Number of PARTITION DIRECTORIES the plan's first file scan will
     actually read, after static partition pruning — straight from
@@ -117,10 +102,13 @@ def partitions_scanned(df: DataFrame) -> int | None:
 def broadcast_threshold_bytes(spark) -> int:
     """The session's ``autoBroadcastJoinThreshold`` in bytes (-1 = off).
 
-    Driver-side size-gated hints key off THIS value so they follow the
-    same session policy Catalyst's own planner follows — setting the
-    threshold to -1 disables gated hints exactly like it disables
-    automatic broadcasts."""
+    For the rare frame Catalyst cannot price (e.g. one over a
+    checkpointed RDD, see ``graph._broadcast_if_fits``), a hint priced
+    from a known row count keys off THIS value, so it follows the same
+    session policy as Catalyst's own broadcast-by-size rule — -1
+    withholds it exactly like it disables automatic broadcasts.  Joins
+    over plain scans need no such hint: Catalyst compares their size
+    estimate with the same conf."""
     raw = str(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     ).strip().lower()

@@ -1132,64 +1132,6 @@ def join_fuzzy_levenshtein(spark, sf_dir):
     return matched.select("d_key", "d_name", "c_key", "c_name", "distance")
 
 
-def _orders_side_fits_broadcast(spark, orders_side, token=None) -> bool:
-    """Stats-gated broadcast decision for the Q3/Q5 fact edge.
-
-    Probes Catalyst's size estimate of the PRE-JOIN orders scan (a pure
-    planner call, no job): the enriched frame is an inner join of that
-    scan with a dim, so ``|enriched| ≤ |orders scan| × bounded width``
-    and the scan estimate is a sound upper bound — unlike the join
-    node's own estimate, which inflates multiplicatively without CBO.
-    The bound is compared against the session's
-    ``autoBroadcastJoinThreshold`` so the gate follows the same policy
-    knob as Catalyst's planner (-1 disables it).  At the 100 TB design
-    point the scan estimate is in the terabytes and the gate always
-    declines — the unconditional ``F.broadcast`` pin this replaces
-    would have OOM'd the driver there.
-
-    The verdict is memoized per (session, lineage, threshold): the scan
-    estimate is pure metadata (parquet footer sizes) and stable for a
-    given input, while computing it forces analysis + optimization of
-    the probe frame — ~50 ms of py4j/Catalyst per call that would
-    otherwise be paid on every plan construction."""
-    from .. import plans
-
-    thr = plans.broadcast_threshold_bytes(spark)
-    if thr <= 0:
-        return False
-    # applicationId, not id(spark): id() can be recycled after a
-    # stopped session is GC'd, letting a new session inherit a stale
-    # gate verdict; the app id is unique per SparkContext lifetime.
-    app_id = spark.sparkContext.applicationId
-    if token is not None:
-        # Fast memo: a caller-supplied (query, dataset) token lets the
-        # verdict be reused WITHOUT re-building the probe frame at all —
-        # constructing it costs 2 eager analyzer passes (~30 ms of the
-        # old per-run build), and ``orders_side`` may then be passed as
-        # a zero-arg thunk that is only invoked on a miss.
-        tkey = (app_id, token, thr)
-        hit = _GATE_CACHE.get(tkey)
-        if hit is not None:
-            return hit
-    frame = orders_side() if callable(orders_side) else orders_side
-    key = (
-        app_id,
-        frame._jdf.queryExecution().logical().semanticHash(),
-        thr,
-    )
-    hit = _GATE_CACHE.get(key)
-    if hit is None:
-        _util.sweep_session_caches(app_id)
-        hit = plans.estimated_size_bytes(frame) <= thr
-        _GATE_CACHE[key] = hit
-    if token is not None:
-        _GATE_CACHE[(app_id, token, thr)] = hit
-    return hit
-
-
-_GATE_CACHE: dict[tuple, bool] = _util.register_session_cache({})
-
-
 @query(
     "join_star_q5",
     oracle="""
@@ -1210,96 +1152,54 @@ _GATE_CACHE: dict[tuple, bool] = _util.register_session_cache({})
 def join_star_q5(spark, sf_dir):
     """TPC-H Q5 shape: multi-way star join.
 
-    Scale posture: true dimensions (region/nation/customer-dim) are
-    always broadcast; the lineitem↔orders edge is chosen by the
-    stats-gated ``_orders_side_fits_broadcast`` probe — broadcast +
-    stream when the orders scan estimate bounds the enriched side under
-    the session threshold, otherwise a direct shuffle join with the
-    tiny n_name rollup folding map-side above it (the 100 TB shape;
-    the gate always declines there)."""
+    Scale posture: the true dimensions (customer/nation/region) carry
+    ``BROADCAST`` hints; the lineitem↔orders edge carries none, so
+    Catalyst decides it — the date-filtered, key-projected orders scan
+    is a direct join child of lineitem, and ``JoinSelection`` compares
+    its size estimate with ``autoBroadcastJoinThreshold``.  Under the
+    threshold orders broadcasts as an INDEPENDENT base-scan build next
+    to the dim builds (AQE materializes them concurrently) and the
+    lineitem probe pipelines all four hash joins in one stage; the only
+    shuffle is the 25-group rollup.  Over it — always at the 100 TB
+    design point, or with the threshold at -1 — the edge is a
+    sort-merge join on l_orderkey/o_orderkey and the n_name rollup
+    folds map-side above it (r8 at sf10: direct join 3.92 s vs
+    per-orderkey pre-aggregate 4.41 s — the grouping key is n_name,
+    not the join key, so a pre-aggregate only adds a fact-cardinality
+    hash table).
+
+    Scale-path trade of this plain shape: the region filter applies
+    after the fact edge, so the orderkey shuffle carries the
+    date-filtered orders of every region (~5× the ASIA rows) instead of
+    a region-pruned set.  Orders has ~1/4 of lineitem's rows and ships
+    two BIGINT columns, so the exchange grows by roughly 5% of its
+    rows; a region-pruning semi-join would instead evaluate
+    customer⋈nation⋈region twice (once to prune, once for n_name).
+    Spark's runtime Bloom filter prunes lineitem rows against the
+    date-filtered orders build in either shape."""
     r = load(spark, sf_dir, "region")
     n = load(spark, sf_dir, "nation")
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-
-    # Both paths are built as ONE sql() statement: classic DataFrames
-    # run the analyzer eagerly per transformation, so the previous
-    # ~20-op chain cost ~0.11 s of driver-side plan construction per
-    # run (guide §4 applied at build time); a single statement parses
-    # and analyzes once.  Join ORDER in the FROM clause reproduces the
-    # old DataFrame shapes exactly (Catalyst keeps written order
-    # without CBO), so the physical plans — and the plan-pin tests —
-    # are unchanged.
-    revenue = (
-        "sum(floor((l_extendedprice * (1 - l_discount)) * 10000 + 0.5d))"
-        " / cast(10000 as double) AS revenue"
-    )
-    filters = """
-      WHERE r.r_name = 'ASIA'
-        AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-        AND o.o_orderdate <  TIMESTAMP '1998-01-01'
-    """
-    # probe the PRUNED projection actually broadcast (2 of 6 columns),
-    # not the full orders scan — the gate should price what ships; the
-    # thunk only builds it on a gate-memo miss
-    if _orders_side_fits_broadcast(
-        spark,
-        lambda: o.filter(
-            (F.col("o_orderdate") >= "1996-01-01")
-            & (F.col("o_orderdate") < "1998-01-01")
-        ).select("o_orderkey", "o_custkey"),
-        token=("q5_orders", sf_dir),
-    ):
-        # Small-side path: every broadcast build is an INDEPENDENT base
-        # scan (orders, customer, nation, region), so AQE materializes
-        # all four concurrently — one wall-clock round instead of the
-        # serialized chain bcast(r) → bcast(n⋈r) → bcast(c⋈n⋈r) →
-        # bcast(o⋈dims) that a pre-joined dim tree costs.  The lineitem
-        # probe then pipelines all four broadcast hash joins in a single
-        # stage; the only shuffle is the 5-group rollup.  (The probed
-        # orders estimate bounds the largest broadcast; c/n/r are true
-        # dims.)
-        return spark.sql(
-            f"""
-            SELECT /*+ BROADCAST(o), BROADCAST(c), BROADCAST(n),
-                       BROADCAST(r) */
-                   n.n_name, {revenue}
-            FROM {{li}} l
-            JOIN {{o}} o ON l.l_orderkey = o.o_orderkey
-            JOIN {{c}} c ON o.o_custkey = c.c_custkey
-            JOIN {{n}} n ON c.c_nationkey = n.n_nationkey
-            JOIN {{r}} r ON n.n_regionkey = r.r_regionkey
-            {filters}
-            GROUP BY n.n_name
-            """,
-            li=li, o=o, c=c, n=n, r=r,
-        )
-    # Scale path: DIRECT shuffle join, aggregation after.  Unlike Q3
-    # (grouping key == join key, so agg-below-join removes the
-    # re-aggregation), Q5's final grouping key is n_name — ~25 groups —
-    # so a per-l_orderkey pre-aggregate would hash 60 M rows into a
-    # fact-cardinality group table and STILL shuffle-join the result:
-    # strictly more shuffle volume (fact + fact-keyed partials) and one
-    # more stage barrier than joining the fact directly and letting the
-    # 25-group rollup fold map-side.  Measured at sf10 (r8): direct
-    # 3.92 s vs pre-agg 4.41 s; Spark's runtime Bloom filter (on by
-    # default) additionally prunes lineitem rows whose orderkey misses
-    # the date-filtered orders build when the creation side fits its
-    # threshold.  At 100 TB both sides shuffle on l_orderkey/o_orderkey
-    # and AQE handles skew; no fact data is ever broadcast.  The FROM
-    # order builds (c⋈n⋈r) → orders (all dim-broadcast) first, then the
-    # fact edge last, reproducing the old enriched-orders shape.
+    # ONE sql() statement: classic DataFrames run the analyzer eagerly
+    # per transformation; a single statement parses and analyzes once.
+    # FROM order is the join order (Catalyst keeps written order
+    # without CBO).
     return spark.sql(
-        f"""
+        """
         SELECT /*+ BROADCAST(c), BROADCAST(n), BROADCAST(r) */
-               n.n_name, {revenue}
-        FROM {{o}} o
-        JOIN {{c}} c ON o.o_custkey = c.c_custkey
-        JOIN {{n}} n ON c.c_nationkey = n.n_nationkey
-        JOIN {{r}} r ON n.n_regionkey = r.r_regionkey
-        JOIN {{li}} l ON l.l_orderkey = o.o_orderkey
-        {filters}
+               n.n_name,
+               sum(floor((l_extendedprice * (1 - l_discount)) * 10000
+                   + 0.5d)) / cast(10000 as double) AS revenue
+        FROM {li} l
+        JOIN {o} o ON l.l_orderkey = o.o_orderkey
+        JOIN {c} c ON o.o_custkey = c.c_custkey
+        JOIN {n} n ON c.c_nationkey = n.n_nationkey
+        JOIN {r} r ON n.n_regionkey = r.r_regionkey
+        WHERE r.r_name = 'ASIA'
+          AND o.o_orderdate >= TIMESTAMP '1996-01-01'
+          AND o.o_orderdate <  TIMESTAMP '1998-01-01'
         GROUP BY n.n_name
         """,
         li=li, o=o, c=c, n=n, r=r,
@@ -1327,78 +1227,53 @@ def join_star_q5(spark, sf_dir):
 def join_q3_topk(spark, sf_dir):
     """TPC-H Q3 shape: 3-way join + group + deterministic top-k.
 
-    Only the customer dim is unconditionally broadcast.  The
-    fact-derived ``enriched`` side goes through the stats-gated
-    ``_orders_side_fits_broadcast`` probe: under the threshold it is
-    broadcast and lineitem streams (one shuffle); over it — always, at
-    the 100 TB design point — the edge is a direct shuffle join with
-    the revenue aggregation folded into the join stage (the join's
-    hash partitioning satisfies the grouping), never a driver-side
-    broadcast of fact data."""
+    Only the customer dim carries a ``BROADCAST`` hint.  The
+    date-filtered, key-projected orders scan is a direct join child of
+    lineitem, so Catalyst decides the fact edge: under
+    ``autoBroadcastJoinThreshold`` orders and customer broadcast as
+    INDEPENDENT base-scan builds (AQE materializes them concurrently)
+    and lineitem probes both in one pipelined stage — one shuffle, the
+    per-orderkey aggregate.  Over it — always at the 100 TB design
+    point — the edge is a sort-merge join on the order key whose hash
+    partitioning satisfies the grouping, so the revenue aggregate folds
+    into the join stage (2 exchanges).  TakeOrdered(10) adds no
+    shuffle.
+
+    Scale-path trade of this plain shape: the segment filter applies
+    after the fact edge, so the SQL itself does not prune the orders
+    side of the shuffle to BUILDING customers.  Spark's runtime Bloom
+    filter prunes it — probing the orders scan on o_custkey before the
+    exchange — only while the filtered customer side fits
+    ``runtime.bloomFilter.creationSideThreshold`` (128 MB, see
+    ``session.get_spark``).  Above that, as at the 100 TB design point,
+    every date-filtered order enters the shuffle, about 5× the rows of
+    a segment-pruned side; no run at that size has measured the cost.
+    Alternatives, measured interleaved on 4 cores: the customer-first
+    shape ``(orders ⋈ broadcast customer) ⋈ lineitem`` was 4-6% faster
+    at sf1 (``tools/make_sf1.py``; inside its run-to-run spread), but
+    its o⋈c estimate is the product of both scans, so Catalyst would
+    never broadcast orders at small scale; a LEFT SEMI reduction of
+    orders in a CTE prunes at any size, but its broadcast waits for the
+    customer broadcast, which raised the sf0.01 warm step median from
+    0.29 s to 0.37 s."""
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    # single-statement builds for both paths — see join_star_q5 for the
-    # analyzer-pass arithmetic; join order in FROM reproduces the old
-    # DataFrame shapes and the plan pins exactly.
-    select_body = """
-           o.o_orderkey,
-           sum(floor((l_extendedprice * (1 - l_discount)) * 10000 + 0.5d))
-               / cast(10000 as double) AS revenue,
-           cast(o.o_orderdate as date) AS orderdate
-    """
-    filters = """
-      WHERE c.c_mktsegment = 'BUILDING'
-        AND o.o_orderdate < TIMESTAMP '1998-01-01'
-        AND l.l_shipdate > TIMESTAMP '1996-01-01'
-    """
-    tail = """
-      GROUP BY o.o_orderkey, o.o_orderdate
-      ORDER BY revenue DESC, o_orderkey
-      LIMIT 10
-    """
-    if _orders_side_fits_broadcast(
-        spark,
-        lambda: o.filter(F.col("o_orderdate") < "1998-01-01")
-        .select("o_orderkey", "o_custkey", "o_orderdate"),
-        token=("q3_orders", sf_dir),
-    ):
-        # Small-side path: broadcast orders and customer as INDEPENDENT
-        # base-scan builds (materialized concurrently by AQE) instead of
-        # broadcasting the o⋈c join — the join-then-broadcast shape
-        # serializes bcast(c) → enriched stage → bcast(enriched), one
-        # scheduler round each.  lineitem probes both broadcast hash
-        # joins in one pipelined stage; one shuffle (per-orderkey agg of
-        # the filter-reduced joined rows).
-        return spark.sql(
-            f"""
-            SELECT /*+ BROADCAST(o), BROADCAST(c) */ {select_body}
-            FROM {{li}} l
-            JOIN {{o}} o ON l.l_orderkey = o.o_orderkey
-            JOIN {{c}} c ON o.o_custkey = c.c_custkey
-            {filters} {tail}
-            """,
-            li=li, o=o, c=c,
-        )
-    # Scale path: DIRECT shuffle join, aggregation after.  The join is
-    # selective (BUILDING ≈ 1/5 of customers), so a per-orderkey
-    # pre-aggregate would hash the FULL fact into a fact-cardinality
-    # group table and then discard ~80% of it at the join; joining
-    # first aggregates only survivors.  No extra exchange: the SMJ
-    # leaves both sides hash-partitioned on the order key, and
-    # grouping on (o_orderkey, o_orderdate) is satisfied by that
-    # clustering, so the aggregation folds into the join stage
-    # (pinned: 2 exchanges total).  Measured r8 at sf10: 4.12→3.82 s
-    # interleaved.  TakeOrdered(10) adds no shuffle.  FROM order:
-    # (o ⋈ bcast c) first — the segment filter prunes ~80% of orders
-    # BEFORE the fact edge — then the shuffle join with lineitem.
     return spark.sql(
-        f"""
-        SELECT /*+ BROADCAST(c) */ {select_body}
-        FROM {{o}} o
-        JOIN {{c}} c ON o.o_custkey = c.c_custkey
-        JOIN {{li}} l ON l.l_orderkey = o.o_orderkey
-        {filters} {tail}
+        """
+        SELECT /*+ BROADCAST(c) */ o.o_orderkey,
+               sum(floor((l_extendedprice * (1 - l_discount)) * 10000
+                   + 0.5d)) / cast(10000 as double) AS revenue,
+               cast(o.o_orderdate as date) AS orderdate
+        FROM {li} l
+        JOIN {o} o ON l.l_orderkey = o.o_orderkey
+        JOIN {c} c ON o.o_custkey = c.c_custkey
+        WHERE c.c_mktsegment = 'BUILDING'
+          AND o.o_orderdate < TIMESTAMP '1998-01-01'
+          AND l.l_shipdate > TIMESTAMP '1996-01-01'
+        GROUP BY o.o_orderkey, o.o_orderdate
+        ORDER BY revenue DESC, o_orderkey
+        LIMIT 10
         """,
         li=li, o=o, c=c,
     )

@@ -20,13 +20,11 @@ from pyspark.sql.types import StructType
 
 __all__ = [
     "TPCH_TABLES",
-    "load_tables",
     "prepare_media_dir",
     "read_binary_files",
     "read_csv",
     "read_jdbc",
     "read_json",
-    "read_orc",
     "read_parquet",
     "from_rows",
     "write_bucketed",
@@ -84,10 +82,6 @@ def read_json(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
 
 
 def read_binary_files(
@@ -274,11 +268,6 @@ def write_csv(
 
 def write_json(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the standard fixture tables from a scale-factor directory."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TPCH_TABLES}
 
 
 def write_bucketed(

@@ -8,6 +8,8 @@ and no accidental cartesian products.  A change that keeps results
 correct but silently degrades the plan fails here.
 """
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -57,8 +59,9 @@ def test_q3_fact_table_streams(spark, sf_dir):
 
 
 def test_q5_star_one_shuffle(spark, sf_dir):
-    # Default threshold: the stats gate fires (orders scan is tiny), so
-    # the fast path runs — all joins broadcast, ONE shuffle (the rollup).
+    # Default threshold: the date-filtered orders scan is under
+    # autoBroadcastJoinThreshold, so Catalyst broadcasts it — all joins
+    # broadcast, ONE shuffle (the rollup).
     r = rep("join_star_q5", spark, sf_dir)
     assert set(r.joins) == {"BroadcastHashJoin"}
     assert not r.has_cartesian
@@ -66,43 +69,93 @@ def test_q5_star_one_shuffle(spark, sf_dir):
     assert r.scan_width("l_") <= 3
 
 
-@pytest.mark.parametrize("name", ["join_q3_topk", "join_star_q5"])
+# Every query with a lineitem↔orders fact edge whose orders side Catalyst
+# prices by size (no BROADCAST hint on either fact side).
+FACT_EDGE_QUERIES = [
+    "join_q3_topk",
+    "join_star_q5",
+    "join_q7_nation_trade",
+    "join_q8_market_share",
+    "join_q9_profit",
+    "join_q10_returned_customers",
+    "join_q12_late_priority",
+    "join_q21_waiting_suppliers",
+]
+
+
+def _is_lineitem_scan(line: str) -> bool:
+    # Identify lineitem by a column it outputs, not by its file path.
+    return "Scan" in line and "l_orderkey#" in line
+
+
+def _broadcasts_lineitem(simple: str) -> bool:
+    """Whether a BroadcastExchange in a simple explain has a lineitem
+    scan in its subtree.  Fails if the plan scans no lineitem at all,
+    so the check cannot pass vacuously."""
+    lines = simple.splitlines()
+    assert any(_is_lineitem_scan(line) for line in lines), simple
+
+    def depth(line):
+        m = re.search(r"[+:]- ", line)
+        return m.start() if m else len(line) - len(line.lstrip())
+
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" not in line:
+            continue
+        for nxt in lines[i + 1:]:
+            if not nxt.strip() or depth(nxt) <= depth(line):
+                break
+            if _is_lineitem_scan(nxt):
+                return True
+    return False
+
+
+@pytest.mark.parametrize("name", FACT_EDGE_QUERIES)
 def test_no_fact_broadcast_pins(name, spark, sf_dir):
     """No BroadcastExchange may be PINNED on a fact-derived side.
 
-    With ``autoBroadcastJoinThreshold=-1`` both Catalyst's automatic
-    broadcasts AND the queries' stats-gated hint are off (the gate keys
-    off the same conf), leaving only the true-dimension hints.  The
+    With ``autoBroadcastJoinThreshold=-1`` Catalyst's size-based
+    broadcasts are off, leaving only the true-dimension hints.  The
     lineitem↔orders edge — both sides fact-derived, both growing
-    linearly with scale — must then plan as a shuffle join: Q3 shuffles
-    per-orderkey PRE-AGGREGATED revenue units (grouping key == join
-    key), Q5 shuffles the pruned fact directly and folds its 25-group
-    rollup map-side above the join (r8: measured faster than pre-agg
-    at sf3/sf10 — the per-orderkey partial table is fact-cardinality
-    there, pure overhead).  Either way the shuffle is keyed on
-    l_orderkey and no driver-side broadcast of fact data exists
-    anywhere in the plan.  This is exactly the plan the same code
-    produces at the 100 TB design point, where the scan estimate always
-    exceeds the threshold."""
+    linearly with scale — must then plan as a sort-merge join on the
+    order key, with no driver-side broadcast of fact data anywhere in
+    the plan.  This is the plan the same SQL produces at the 100 TB
+    design point, where the orders estimate always exceeds the
+    threshold.  Q3 applies its customer segment above the edge and
+    aggregates in the join stage; Q5 shuffles the pruned fact directly
+    and folds its 25-group rollup map-side above the join (r8: measured
+    faster than a per-orderkey pre-aggregate at sf3/sf10)."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        r = rep(name, spark, sf_dir)
+        df = QUERIES[name].spark_fn(spark, sf_dir)
+        r = plans.plan_report(df)
+        simple = plans.simple_plan(df)
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    # Dim hints broadcast; the fact edge is a SortMergeJoin.
-    assert set(r.joins) == {"BroadcastHashJoin", "SortMergeJoin"}
-    # Exactly one shuffle join: the lineitem↔orders edge (formatted
-    # explain names each node twice — tree line + detail section).
-    assert r.joins.count("SortMergeJoin") <= 2
-    # The fact-side shuffle is keyed on the join key (Q3: per-orderkey
-    # pre-aggregated units; Q5: the pruned fact rows themselves).
+    # The fact edge is a SortMergeJoin keyed on the order key.
+    smj_keys = re.findall(
+        r"SortMergeJoin \[(\w+)#\d+L?\], \[(\w+)#\d+L?\]", simple
+    )
+    assert {"l_orderkey", "o_orderkey"} in [set(k) for k in smj_keys]
     assert any("l_orderkey" in k for k in r.shuffle_keys)
+    assert not _broadcasts_lineitem(simple)
+    # Under the default threshold Catalyst may broadcast orders, never
+    # lineitem.
+    default = plans.simple_plan(QUERIES[name].spark_fn(spark, sf_dir))
+    assert not _broadcasts_lineitem(default)
+    if name in ("join_q3_topk", "join_star_q5"):
+        # Dim hints broadcast; the fact edge is a SortMergeJoin.
+        assert set(r.joins) == {"BroadcastHashJoin", "SortMergeJoin"}
+        # Exactly one shuffle join: the lineitem↔orders edge (formatted
+        # explain names each node twice — tree line + detail section).
+        assert r.joins.count("SortMergeJoin") <= 2
 
 
-@pytest.mark.parametrize("name", ["join_q3_topk", "join_star_q5"])
-def test_q3_q5_both_paths_agree(name, spark, sf_dir):
-    """The gated fast path and the 100 TB shuffle path must produce the
-    same rows — the gate is a physical decision, never a semantic one."""
+@pytest.mark.parametrize("name", FACT_EDGE_QUERIES)
+def test_fact_edge_rows_agree_across_thresholds(name, spark, sf_dir):
+    """Broadcast (default threshold) and sort-merge (threshold -1) fact
+    edges must produce the same rows — the threshold is a physical
+    decision, never a semantic one."""
     fast = {
         tuple(r) for r in QUERIES[name].spark_fn(spark, sf_dir).collect()
     }
@@ -114,28 +167,6 @@ def test_q3_q5_both_paths_agree(name, spark, sf_dir):
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert fast == slow
-
-
-def test_broadcast_gate_memo_keys_on_application_id(spark, sf_dir):
-    """The gate memo must key on the SparkContext's applicationId, not
-    ``id(spark)``: CPython recycles object ids after GC, so a stopped
-    session's id can be reused by a NEW session, which would then
-    inherit a stale size verdict.  applicationId is unique per context
-    lifetime, so a replacement session can never collide.  Pins the
-    key shape (a str app id, never an int identity) after exercising
-    the gate through both Q3 and Q5."""
-    from data_pipeline_package_for_python_spark.queries import relational as R
-
-    for name in ("join_q3_topk", "join_star_q5"):
-        QUERIES[name].spark_fn(spark, sf_dir)
-    assert R._GATE_CACHE, "gate was never consulted"
-    app_id = spark.sparkContext.applicationId
-    for key in R._GATE_CACHE:
-        assert isinstance(key[0], str), "memo key must be an app id"
-        assert key[0] == app_id
-        # a replacement session gets a fresh applicationId, so its
-        # probes can never hit this session's entries
-        assert (key[0] + "-replacement",) + key[1:] not in R._GATE_CACHE
 
 
 def test_near_dedup_no_cartesian_no_fact_broadcast(spark, sf_dir, tables):
