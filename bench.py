@@ -12,13 +12,16 @@ ONE JSON line on stdout:
 
     {"metric": "...", "value": <sum of spark medians>, "unit": "sec",
      "queries": {"b1": ..., ...}, "sf": 0.1,
-     "duckdb": {...}, "ratio": {...}, "startup_sec": ...}
+     "duckdb": {...}, "ratio": {...}, "startup_sec": ...,
+     "env": {"cpus": ..., "master": ..., "default_parallelism": ...,
+             "shuffle_partitions": ...}}
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -70,6 +73,22 @@ def interleaved_medians(spark_fn, duck_fn, runs: int = RUNS):
         statistics.median(s_times),
         statistics.median(d_times) if d_times else 0.0,
     )
+
+
+def session_env(spark) -> dict:
+    """The compute environment of the live session, so a reader can
+    tell what the numbers ran on.  ``cpus`` is the thread count of a
+    ``local[N]`` master, else the scheduler's default parallelism."""
+    sc = spark.sparkContext
+    m = re.fullmatch(r"local\[(\d+)\]", sc.master)
+    return {
+        "cpus": int(m.group(1)) if m else sc.defaultParallelism,
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "shuffle_partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        ),
+    }
 
 
 def main() -> None:
@@ -205,6 +224,7 @@ def main() -> None:
         },
         "startup_sec": round(startup, 2),
         "warmup_passes": warmup_passes,
+        "env": session_env(spark),
     }
     if prepared_sec:
         out["prepared"] = prepared_sec

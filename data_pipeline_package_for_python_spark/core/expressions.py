@@ -27,7 +27,7 @@ Deliberate deviations (documented, tested):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Callable, Sequence
+from typing import Callable
 
 __all__ = [
     "ALL",
@@ -164,6 +164,3 @@ def create_placeholder(name: str) -> Placeholder:
     """Bare constructor (parity with dpp.py:626-627)."""
     return Placeholder(name)
 
-
-def names_of(placeholders: Sequence[Any]) -> list[str]:
-    return [p.name for p in placeholders]

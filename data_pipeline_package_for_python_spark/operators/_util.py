@@ -20,9 +20,11 @@ def collect_no_aqe(df: DataFrame) -> list:
     coalesce anything useful nor hit skew at ANY scale; it only splits
     the action into an extra shuffle-stage job (2 jobs instead of 1,
     measured at sf0.01 with identical wall time).  Scoping the conf
-    around a single driver-side action is the established pattern here
-    (streaming's ``_scoped_state_parallelism``); the harness runs
-    queries sequentially, so the session-global set/restore is safe."""
+    around a single driver-side action follows streaming's
+    ``_scoped_state_parallelism``.  The flip is SESSION-GLOBAL, not
+    scoped to this action: any query that another driver thread plans
+    on the same session while the window is open also runs without
+    AQE, and two overlapping windows can restore each other's value."""
     spark = df.sparkSession
     key = "spark.sql.adaptive.enabled"
     prev = spark.conf.get(key, None)

@@ -270,104 +270,6 @@ def _broadcast_if_fits(frame: DataFrame, n_rows: int, bytes_per_row: int = 32):
     return frame
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "u",
-    dst: str = "v",
-    *,
-    iterations: int = 10,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list: (id, rank).
-
-    Power iteration as `iterations` rounds of (rank ⋈ out-edges →
-    groupBy dst), each round one shuffle on node id; dangling-node mass
-    is redistributed uniformly (one scalar agg per round folded into
-    the same job — no extra pass over the edges).  Lineage is truncated
-    per round with ``localCheckpoint`` exactly like
-    ``connected_components``.  Ranks are L1-normalized to sum to the
-    node count (the random-surfer convention where the uniform start is
-    rank 1 per node).
-
-    Float caveat: cross-partition double summation is order-sensitive,
-    so results are reproducible-to-~1e-12, not bit-deterministic — the
-    registered query is rows-only-checked with law tests (mass
-    conservation, uniform-graph fixed point) in tests/test_laws.py.
-    """
-    nodes = (
-        edges.select(F.col(src).alias("id"))
-        .union(edges.select(F.col(dst).alias("id")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    # still checkpointed (r11): referenced by the elist_deg fold below
-    # and by dangling_ids at setup — one build
-    out_deg = (
-        edges.groupBy(F.col(src).alias("id"))
-        .agg(F.count(F.lit(1)).alias("out_deg"))
-        .localCheckpoint(eager=False)
-    )
-    # The out-degree is FOLDED INTO the edge layout once (guide §2.4):
-    # the previous loop joined ranks ⋈ out_deg at the top of every
-    # round — one extra join (and its broadcast/exchange) × iterations
-    # for a value that never changes.  ``elist_deg`` carries
-    # (e_src, e_dst, out_deg) under a single checkpoint, so each round
-    # is exactly one join (ranks attach by src) + one aggregation
-    # (contributions by dst).  ``rank / out_deg`` per edge row equals
-    # the per-src share it replaces, so the summed in-mass — and the
-    # result — is unchanged (up to float summation order, which was
-    # never guaranteed; see the determinism caveat above).
-    # Checkpoint storage note (r11 advice): these one-time layouts stay
-    # pinned on executors for the session lifetime — the documented
-    # cost of lineage truncation in every iterative operator here.
-    elist_deg = (
-        edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
-        .join(out_deg.select(F.col("id").alias("e_src"), "out_deg"), "e_src")
-        .localCheckpoint(eager=False)
-    )
-    # nodes with no out-edges, computed once instead of re-deriving the
-    # NULL-out_deg frontier from a per-round join
-    dangling_ids = nodes.join(
-        out_deg, "id", "left_anti"
-    ).localCheckpoint(eager=False)
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    for _ in range(iterations):
-        # dangling mass: ranks of nodes with no out-edges (one scalar)
-        dangling = (
-            ranks.join(_broadcast_if_fits(dangling_ids, n), "id", "semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .collect()[0][0]
-        )
-        inbound = (
-            elist_deg.join(
-                _broadcast_if_fits(
-                    ranks.select(F.col("id").alias("e_src"), "rank"), n
-                ),
-                "e_src",
-            )
-            .groupBy(F.col("e_dst").alias("id"))
-            .agg(
-                F.sum(F.col("rank") / F.col("out_deg")).alias("in_mass")
-            )
-        )
-        base = (1.0 - damping) + damping * dangling / n
-        ranks = (
-            nodes.join(inbound, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
-
-
 def pagerank_exact(
     edges: DataFrame,
     src: str = "u",
@@ -378,14 +280,16 @@ def pagerank_exact(
     assume_no_dangling: bool = False,
     assume_bidirected: bool = False,
 ) -> DataFrame:
-    """Bit-deterministic PageRank: same power iteration as ``pagerank``
-    but every quantity is a BIGINT in units of 1/``scale`` and damping
-    is the exact rational 17/20 (0.85) applied with floor division.
+    """Bit-deterministic fixed-iteration PageRank over a directed edge
+    list: (id, rank_scaled).  Power iteration from rank 1 per node with
+    dangling-node mass redistributed uniformly, where every quantity is
+    a BIGINT in units of 1/``scale`` and damping is the exact rational
+    17/20 (0.85) applied with floor division.
 
-    Why a second entry point: ``pagerank``'s cross-partition double
-    sums are order-sensitive (reproducible to ~1e-12, not bitwise), so
-    its registered query could only be rows-only checked.  Here every
-    per-round step is exact integer arithmetic —
+    Why integers: cross-partition double sums are order-sensitive
+    (reproducible to ~1e-12, not bitwise), so a float PageRank could
+    only be rows-only checked.  Here every per-round step is exact
+    integer arithmetic —
 
       share_u    = rank_u div out_deg_u                (floor)
       in_mass_v  = Σ share_u  over in-edges            (exact BIGINT)
@@ -398,15 +302,14 @@ def pagerank_exact(
     bit-identical under any partitioning or summation order and a
     DuckDB twin replaying the same floor arithmetic hash-matches.
     All quantities are nonnegative, so Spark's truncating ``div`` and
-    DuckDB's flooring ``//`` agree.  Distribution shape is unchanged
-    from ``pagerank`` — one shuffle per round (rank ⋈ out-edges →
-    groupBy dst) — EXCEPT the dangling scalar: instead of a per-round
-    ``collect()`` (10 driver sync points), it stays in-plan as a 1-row
-    aggregate cross-joined back (the broadcast scalar-total pattern),
-    so the whole 10-round iteration is one job with no driver
-    round-trips.  Lineage truncated with localCheckpoint.  Overflow
-    headroom: 17·in_mass ≤ 17·n·scale, so scale=1e6 is safe to
-    n≈5×10¹¹ nodes in BIGINT.
+    DuckDB's flooring ``//`` agree.  Distribution shape: one shuffle
+    per round (rank ⋈ out-edges → groupBy dst); the dangling scalar is
+    not ``collect()``-ed per round (10 driver sync points) but stays
+    in-plan as a 1-row aggregate cross-joined back (the broadcast
+    scalar-total pattern), so the whole 10-round iteration is one job
+    with no driver round-trips.  Lineage truncated with
+    localCheckpoint.  Overflow headroom: 17·in_mass ≤ 17·n·scale, so
+    scale=1e6 is safe to n≈5×10¹¹ nodes in BIGINT.
 
     Returns (id, rank_scaled BIGINT); rank_scaled/scale ≈ the float
     rank (L1 mass ≈ node count, the rank-1-per-node convention), up to
@@ -616,10 +519,10 @@ def bfs_distances(
     elist = edges.select(
         F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
     ).localCheckpoint(eager=False)
-    # NOTE (r12, measured and rejected): the pagerank-style gated
+    # NOTE (r12, measured and rejected): the pagerank_exact-style gated
     # broadcast of the settled frontier made this loop SLOWER at
     # fixture scale (17 -> 19 jobs/run, 1.27 -> 1.68 s warm median at
-    # sf0.01) — unlike pagerank, each BFS round still shuffles the full
+    # sf0.01) — unlike PageRank, each BFS round still shuffles the full
     # (dist ∪ frontier) union for the groupBy-min, so the hint only
     # added a broadcast job + the |V| count job without removing any
     # exchange.  The relaxation keeps its shuffle-join shape.

@@ -47,7 +47,7 @@ __all__ = [
     "ivf_topk",
     "ivf_train_centroids",
     "release_codebook_broadcasts",
-    "kmeans_embeddings",
+    "kmeans_embeddings_exact",
     "l2_norm",
     "random_hyperplanes",
     "rrf_fuse",
@@ -982,124 +982,6 @@ def bucketed_topk(
     return _ranked_topk(scored, k)
 
 
-def _sq_dist_to_literal_sql(vec_col: str, centroid: list[float]) -> str:
-    """Squared L2 distance from an array column to a constant centroid —
-    a zip_with/aggregate fold over literals, fully inside codegen.
-    Emitted as SQL text: the Column-algebra form cost one F.lit py4j
-    round trip per dimension per centroid (k×d per assignment — see
-    OPTIMIZATION_r11.md).  CAST(repr AS DOUBLE) reproduces each double
-    exactly (shortest-repr round trip)."""
-    lits = ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in centroid)
-    return (
-        f"aggregate(zip_with({vec_col}, array({lits}), "
-        f"(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-def assign_to_centroids(
-    df: DataFrame, vec_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """Add a ``cluster`` column: index of the nearest centroid (squared
-    L2, first-match tie-break).
-
-    The centroids are baked into the expression as literals, so
-    assignment is MAP-ONLY — no join, no shuffle, one pass over the
-    corpus regardless of scale.  This is the right shape for the k ≤ a
-    few hundred of corpus bucketing; for large codebooks use
-    :func:`ivf_assign` (broadcast centroid frame) instead, which trades
-    a per-vector window shuffle for an O(1)-size plan."""
-    dists = "array({})".format(", ".join(
-        _sq_dist_to_literal_sql(vec_col, c) for c in centroids
-    ))
-    return df.selectExpr(
-        "*",
-        f"cast(array_position({dists}, array_min({dists})) - 1 as int)"
-        " AS cluster",
-    )
-
-
-def kmeans_embeddings(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    max_iterations: int = 10,
-) -> DataFrame:
-    """Lloyd's k-means over an embedding column — the corpus-diversity /
-    semantic-bucketing primitive (cluster-balanced sampling, per-topic
-    quotas, semantic dedup at the cluster level).
-
-    Spark-first shape, per iteration:
-
-    - **assign**: map-only literal-centroid argmin (no shuffle — see
-      :func:`assign_to_centroids`);
-    - **update**: ``posexplode`` of assigned vectors streaming into a
-      partial-aggregated ``groupBy(cluster, pos)`` — the shuffle carries
-      only k x d partial sums per map task, never vectors;
-    - **driver state**: exactly the k x d centroid matrix (same contract
-      as Spark MLlib's KMeans), never data rows.
-
-    Determinism: initial centroids are the k lowest-id vectors (a pure
-    function of the data); per-cluster sums accumulate in
-    ``DECIMAL(38,18)``, which is exact and order-independent, so the
-    centroid trajectory — and therefore the final assignment — is
-    bit-reproducible run to run regardless of partitioning.  (Plain
-    double sums would make cluster boundaries flap with shuffle order.)
-    Convergence = centroid fixpoint, else ``max_iterations``.
-
-    Empty clusters keep their previous centroid.  Returns (id, cluster)
-    with the final ``centroids`` list and per-iteration ``n_changed``
-    trace attached as attributes.
-    """
-    # checkpointed like the exact twin (kmeans_embeddings_exact): the
-    # frame is re-scanned by every iteration's update collect plus the
-    # final assignment — without the checkpoint that is max_iterations+2
-    # full source scans of pure recompute.  Checkpoint storage note
-    # (r11 advice): the blocks stay pinned on executors for the session
-    # lifetime — the documented cost of lineage truncation shared with
-    # the graph operators' per-round checkpoints.
-    vecs = (
-        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-        .filter(F.col("__v").isNotNull())
-        .localCheckpoint(eager=False)
-    )
-    seed_rows = (
-        vecs.orderBy("__id").limit(k).select("__v").collect()
-    )
-    centroids = [list(map(float, r["__v"])) for r in seed_rows]
-    if len(centroids) < k:
-        raise ValueError(f"need at least k={k} vectors, got {len(centroids)}")
-
-    # Update collect runs with AQE scoped OFF exactly like the exact
-    # twin (see kmeans_embeddings_exact): a fixed k×d-group two-stage
-    # aggregate gains nothing from runtime re-planning at any scale,
-    # and dropping it halves the per-iteration job count.
-    for _ in range(max_iterations):
-        sums = _collect_no_aqe(
-            assign_to_centroids(vecs, "__v", centroids)
-            .select("cluster", F.posexplode(F.col("__v")).alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(
-                F.sum(F.col("x").cast("decimal(38,18)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-        new_centroids = [list(c) for c in centroids]
-        for r in sums:
-            new_centroids[r["cluster"]][r["pos"]] = float(r["s"]) / r["n"]
-        if new_centroids == centroids:
-            break
-        centroids = new_centroids
-
-    result = assign_to_centroids(vecs, "__v", centroids).select(
-        F.col("__id").alias(id_col), "cluster"
-    )
-    result.centroids = centroids
-    return result
-
-
 def kmeans_embeddings_exact(
     df: DataFrame,
     *,
@@ -1109,8 +991,10 @@ def kmeans_embeddings_exact(
     iterations: int = 5,
     scale: int = 1_000_000,
 ) -> DataFrame:
-    """Bit-deterministic Lloyd's k-means: same shape as
-    :func:`kmeans_embeddings` but EVERY quantity is a BIGINT —
+    """Bit-deterministic Lloyd's k-means over an embedding column — the
+    corpus-diversity / semantic-bucketing primitive (cluster-balanced
+    sampling, per-topic quotas, semantic dedup at the cluster level).
+    EVERY quantity is a BIGINT —
 
       u_d        = floor(x_d · scale + 0.5)        (per-dim quantize)
       dist(v, c) = Σ_d (u_d − c_d)²                (exact BIGINT)
@@ -1119,17 +1003,20 @@ def kmeans_embeddings_exact(
     — so assignment argmin (first-match tie-break), centroid
     trajectory, and final clusters are bit-identical under any
     partitioning AND replayable as pure integer SQL: a DuckDB twin
-    unrolling the fixed iteration count hash-matches, which upgrades
-    the registered query from rows-only to hash-checked (the
-    ``pagerank_exact`` discipline applied to clustering; quantization
-    at 1e-6 moves cluster boundaries by ≤1 unit — immaterial for
-    corpus bucketing).  Distribution shape is unchanged: map-only
-    literal-centroid assignment, k×d integer partials per iteration,
-    k×d driver state.  Seeds = the k lowest-id vectors.  Fixed
+    unrolling the fixed iteration count hash-matches, so the
+    registered query is hash-checked (the ``pagerank_exact``
+    discipline applied to clustering; quantization at 1e-6 moves
+    cluster boundaries by ≤1 unit — immaterial for corpus bucketing).
+    Spark-first shape, per iteration: map-only literal-centroid
+    assignment (no shuffle), a ``posexplode`` into a partial-aggregated
+    ``groupBy(cluster, pos)`` whose shuffle carries only k×d integer
+    partials per map task, and exactly the k×d centroid matrix as
+    driver state (never data rows).  Seeds = the k lowest-id vectors.  Fixed
     ``iterations`` (no early convergence break) so both engines run
     the identical schedule.  Empty clusters keep their previous
     centroid.  Overflow headroom: |u| ≤ ~scale ⇒ per-dim square ≤
-    4·scale², ×64 dims ≈ 2.6e14 ≪ 2⁶³."""
+    4·scale², ×64 dims ≈ 2.6e14 ≪ 2⁶³.  Returns (id, cluster) with the
+    final integer ``centroids`` list attached as an attribute."""
     uexpr = (
         f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE)"
         f" * {int(scale)} + 0.5d) AS BIGINT))"

@@ -646,9 +646,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     per round with localCheckpoint — the connected-components
     discipline applied to power iteration.  Exact-integer (scaled
     BIGINT, floor-division damping) so the result is bit-deterministic
-    and hash-checked against the DuckDB unrolled-CTE twin; the float
-    variant (operators/graph.py pagerank) remains for API users and is
-    law-checked in tests/test_graph_ops.py."""
+    and hash-checked against the DuckDB unrolled-CTE twin; its laws
+    (mass conservation, uniform fixed point, symmetry, agreement with a
+    float power iteration) are checked in tests/test_graph_ops.py."""
     from ..operators.graph import pagerank_exact
 
     e = _graph_edges(spark, sf_dir)

@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..core import PREV, Pipeline, V
-from ._registry import dsum, load, query
+from . import llm  # noqa: F401  (registers search_hybrid_rrf)
+from ._registry import QUERIES, dsum, load, query
 
 
 @query(
@@ -227,13 +228,9 @@ def dsl_curation_graph_bridge(spark, sf_dir):
     return p.by_lang
 
 
-from . import llm as _llm  # noqa: E402  (registers search_hybrid_rrf)
-from ._registry import QUERIES as _Q  # noqa: E402
-
-
 @query(
     "dsl_retrieval_bridge",
-    oracle=_Q["search_hybrid_rrf"].oracle,
+    oracle=QUERIES["search_hybrid_rrf"].oracle,
 )
 def dsl_retrieval_bridge(spark, sf_dir):
     """The round-4 hybrid-retrieval pipeline routed THROUGH the DSL

@@ -1573,9 +1573,9 @@ def embed_kmeans_clusters(spark, sf_dir):
     Upgraded round 4 from rows-only to hash-checked: the fixed
     5-iteration schedule unrolls into a DuckDB integer twin
     (_kmeans_oracle_sql), so assignment argmin, tie-breaks, centroid
-    trajectory, and the final per-cluster sizes are all on the hash.
-    The float-centroid variant (kmeans_embeddings) remains for API
-    users and is law-checked in tests/test_llm_ops.py."""
+    trajectory, and the final per-cluster sizes are all on the hash;
+    planted-blob recovery and run-to-run bit-identity are checked in
+    tests/test_llm_ops.py."""
     emb = load(spark, sf_dir, "embeddings")
     assigned = S.kmeans_embeddings_exact(emb, k=8, iterations=5)
     return assigned.groupBy("cluster").agg(

@@ -310,41 +310,29 @@ def test_ellipsis_placeholder_reserved_raises():
             V(p.x, ...)
 
 
-def test_registry_self_rotation_from_correctness_files(tmp_path, monkeypatch):
-    """The registry derives driver credit from committed
-    CORRECTNESS_r*.json at import: green rows park a query behind the
-    never-checked set, ERR rows do not, and a stale rows-only credit is
-    ignored once the query has gained an oracle (upgrade re-enters the
-    window)."""
-    import json
+def test_registry_iterates_in_registration_order():
+    """``QUERIES`` keeps registration order: each defining module's
+    queries form one contiguous group, the groups follow the import
+    order of ``queries/__init__.py``, and ``zz_canary`` comes last."""
+    import ast
+    import itertools
+    import pathlib
 
-    from data_pipeline_package_for_python_spark.queries import (
-        QUERIES,
-        _driver_green_from_disk,
-    )
+    from data_pipeline_package_for_python_spark import queries
 
-    names = list(QUERIES)
-    with_oracle = [n for n in names if QUERIES[n].oracle is not None]
-    hash_q, oracled = with_oracle[0], with_oracle[1]
-    rows_only = next(n for n in names if QUERIES[n].oracle is None)
-    payload = {
-        hash_q: {"hash_match": True, "err": None, "spark_rows": 5},
-        # ERR row: must NOT count as credit
-        oracled: {"hash_match": None, "err": "boom", "spark_rows": None},
-        # rows-only credit for a query that still has no oracle: counts
-        rows_only: {"hash_match": None, "err": "no_oracle",
-                    "spark_rows": 7},
-    }
-    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(payload))
-    monkeypatch.setenv("SPARK_GRAFT_CORRECTNESS_DIR", str(tmp_path))
-    green = _driver_green_from_disk()
-    assert hash_q in green
-    assert oracled not in green            # ERR is not credit
-    assert rows_only in green              # rows-only while oracle-less
-    # upgrade simulation: same row but the query HAS an oracle now
-    payload2 = {
-        oracled: {"hash_match": None, "err": "no_oracle",
-                  "spark_rows": 7},
-    }
-    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(payload2))
-    assert oracled not in _driver_green_from_disk()
+    tree = ast.parse(pathlib.Path(queries.__file__).read_text())
+    imported = [
+        f"{queries.__name__}.{alias.name}"
+        for node in tree.body
+        if isinstance(node, ast.ImportFrom) and node.level == 1
+        and node.module is None
+        for alias in node.names
+    ]
+    groups = [
+        mod for mod, _ in itertools.groupby(
+            q.spark_fn.__module__ for q in queries.QUERIES.values()
+        )
+    ]
+    assert groups == imported + [queries.__name__]
+    assert list(queries.QUERIES)[-1] == "zz_canary"
+    assert len(queries.QUERIES) == 410

@@ -2,9 +2,9 @@
 dyadic EWMA, SQ8 ANN, expectations report, SimHash near-pairs.
 
 Graph laws run against hand-computable fixtures (K4, paths, stars);
-PageRank is pinned by mass conservation and the uniform fixed point —
-the properties that survive float-summation reordering — because the
-registered query is rows-only-checked.
+the exact-integer PageRank is pinned by mass conservation within its
+floor loss, the uniform fixed point, star symmetry, and agreement with
+a pure-Python float power iteration.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from data_pipeline_package_for_python_spark.operators.graph import (
-    pagerank,
+    pagerank_exact,
     triangle_count,
 )
 
@@ -58,53 +58,81 @@ def test_triangles_dup_and_reversed_edges_collapse(spark):
 # pagerank                                                              #
 # --------------------------------------------------------------------- #
 
+def _float_pagerank(pairs, iterations, damping=0.85):
+    """Reference float power iteration: rank 1 per node at the start,
+    dangling mass spread uniformly."""
+    nodes = sorted({x for e in pairs for x in e})
+    out_deg = dict.fromkeys(nodes, 0)
+    for u, _ in pairs:
+        out_deg[u] += 1
+    rank = dict.fromkeys(nodes, 1.0)
+    for _ in range(iterations):
+        dangling = sum(rank[u] for u in nodes if out_deg[u] == 0)
+        new = dict.fromkeys(
+            nodes, (1 - damping) + damping * dangling / len(nodes)
+        )
+        for u, v in pairs:
+            new[v] += damping * rank[u] / out_deg[u]
+        rank = new
+    return rank
+
+
 def test_pagerank_mass_conservation(spark):
+    """Floor division loses < 3 units per node per round, never more."""
     g = [(i, (i * 7 + 3) % 11) for i in range(11) for _ in (0,)]
-    ranks = pagerank(_edges(spark, g), iterations=8).collect()
-    total = sum(r["rank"] for r in ranks)
-    assert math.isclose(total, len(ranks), rel_tol=1e-9)
+    iters, scale = 8, 1_000_000
+    ranks = pagerank_exact(
+        _edges(spark, g), iterations=iters, scale=scale
+    ).collect()
+    n = len(ranks)
+    total = sum(r["rank_scaled"] for r in ranks)
+    assert abs(total - n * scale) <= 3 * n * iters
 
 
 def test_pagerank_uniform_cycle_fixed_point(spark):
-    n = 6
+    n, scale = 6, 1_000_000
     cycle = [(i, (i + 1) % n) for i in range(n)]
-    ranks = pagerank(_edges(spark, cycle), iterations=5).collect()
+    ranks = pagerank_exact(
+        _edges(spark, cycle), iterations=5, scale=scale
+    ).collect()
+    assert len(ranks) == n
     for r in ranks:
-        assert math.isclose(r["rank"], 1.0, rel_tol=1e-12)
+        assert r["rank_scaled"] == scale
 
 
 def test_pagerank_star_center_dominates(spark):
     star = [(i, 0) for i in range(1, 6)]
-    out = {r["id"]: r["rank"] for r in pagerank(_edges(spark, star)).collect()}
-    assert out[0] > max(v for k, v in out.items() if k != 0)
-    # leaves are dangling-symmetric → identical ranks
-    leaf_ranks = [v for k, v in out.items() if k != 0]
-    assert max(leaf_ranks) - min(leaf_ranks) < 1e-12
-
-
-def test_pagerank_exact_agrees_with_float_after_outdeg_checkpoint(spark):
-    """Ties the two loop variants together after the r11 out_deg
-    checkpoint (the per-round recompute removal must not change what
-    either loop computes): on a dangling-free graph the BIGINT ranks
-    divided by scale match the float ranks within the documented floor
-    loss (< 3 units per node per round)."""
-    from data_pipeline_package_for_python_spark.operators.graph import (
-        pagerank_exact,
-    )
-
-    n, iters, scale = 7, 6, 1_000_000
-    g = [(i, (i + 1) % n) for i in range(n)] + [(i, (i + 3) % n) for i in range(n)]
-    e = _edges(spark, g)
-    fl = {r["id"]: r["rank"] for r in pagerank(e, iterations=iters).collect()}
-    ex = {
+    out = {
         r["id"]: r["rank_scaled"]
-        for r in pagerank_exact(
-            e, iterations=iters, scale=scale, assume_no_dangling=True
-        ).collect()
+        for r in pagerank_exact(_edges(spark, star)).collect()
     }
-    assert set(fl) == set(ex)
-    for node, rank in fl.items():
-        assert abs(ex[node] / scale - rank) <= 3 * iters / scale + 1e-9
+    assert out[0] > max(v for k, v in out.items() if k != 0)
+    # leaves are dangling-symmetric → bit-identical ranks
+    assert len({v for k, v in out.items() if k != 0}) == 1
+
+
+def test_pagerank_exact_agrees_with_float_reference(spark):
+    """The BIGINT ranks divided by scale match a float power iteration
+    within the documented floor loss (< 3 units per node per round):
+    on a dangling-free graph through the ``assume_no_dangling`` path,
+    and on a graph with a dangling node through the general path."""
+    n, iters, scale = 7, 6, 1_000_000
+    ring = [(i, (i + 1) % n) for i in range(n)] + [(i, (i + 3) % n) for i in range(n)]
+    chain = [(i, i + 1) for i in range(n - 1)] + [
+        (i, n - 1) for i in range(0, n - 1, 2)
+    ]
+    for g, no_dangling in ((ring, True), (chain, False)):
+        fl = _float_pagerank(g, iters)
+        ex = {
+            r["id"]: r["rank_scaled"]
+            for r in pagerank_exact(
+                _edges(spark, g), iterations=iters, scale=scale,
+                assume_no_dangling=no_dangling,
+            ).collect()
+        }
+        assert set(fl) == set(ex)
+        for node, rank in fl.items():
+            assert abs(ex[node] / scale - rank) <= 3 * iters / scale + 1e-9
 
 
 def test_pagerank_exact_bidirected_fastpath_bitwise_identical(spark):
@@ -113,10 +141,6 @@ def test_pagerank_exact_bidirected_fastpath_bitwise_identical(spark):
     be BIT-identical to the general path on a bidirected edge list —
     the claim that lets graph_pagerank use it while staying
     hash-checked against the unrolled DuckDB twin."""
-    from data_pipeline_package_for_python_spark.operators.graph import (
-        pagerank_exact,
-    )
-
     n = 9
     onedir = [(i, (i + 1) % n) for i in range(n)] + [
         (i, (i * 4 + 1) % n) for i in range(n)

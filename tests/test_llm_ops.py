@@ -872,16 +872,15 @@ def test_kmeans_recovers_planted_blobs(spark):
     import itertools
 
     # 3 well-separated blobs in 8-d; k-means must recover the exact
-    # partition regardless of init details
+    # partition regardless of init details, and keep it over more
+    # iterations than it needs to converge
     rows = []
     for b, base in enumerate([10.0, -10.0, 30.0]):
         for i in range(20):
             vec = [base + ((i * 7 + d) % 5) * 0.1 for d in range(8)]
             rows.append((b * 100 + i, vec))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = S.kmeans_embeddings(
-        df, k=3, max_iterations=10
-    ).collect()
+    got = S.kmeans_embeddings_exact(df, k=3, iterations=10).collect()
     by_blob = {}
     for r in got:
         by_blob.setdefault(r["vec_id"] // 100, set()).add(r["cluster"])
@@ -892,8 +891,8 @@ def test_kmeans_recovers_planted_blobs(spark):
 
 def test_kmeans_partition_and_determinism(spark, tables):
     emb = tables["embeddings"]
-    a = S.kmeans_embeddings(emb, k=8, max_iterations=4)
-    b = S.kmeans_embeddings(emb, k=8, max_iterations=4)
+    a = S.kmeans_embeddings_exact(emb, k=8, iterations=4)
+    b = S.kmeans_embeddings_exact(emb, k=8, iterations=4)
     rows_a = sorted(map(tuple, a.collect()))
     assert rows_a == sorted(map(tuple, b.collect()))  # bit-reproducible
     assert len(rows_a) == emb.count()  # total partition, no drops
@@ -1403,8 +1402,9 @@ def test_archive_roundtrips_and_corruption(spark):
 
 def test_kmeans_exact_recovers_blobs_and_is_deterministic(spark):
     """The exact-integer k-means (round 4, hash-checkable) recovers
-    planted blobs like the float variant and is bit-reproducible; its
-    1e-6 quantization cannot move well-separated cluster boundaries."""
+    planted blobs — every blob maps to exactly one cluster, and the
+    clusters differ — and is bit-reproducible; its 1e-6 quantization
+    cannot move well-separated cluster boundaries."""
     import itertools
 
     rows = []
