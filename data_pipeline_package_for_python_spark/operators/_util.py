@@ -4,38 +4,47 @@ from __future__ import annotations
 
 import threading
 
-from pyspark.sql import DataFrame
+from pyspark import RDD
+from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
-    "collect_no_aqe", "ensure_parallel", "md5_key_expr",
+    "conf_session", "ensure_parallel", "md5_key_expr", "rebind",
     "register_session_cache", "sweep_session_caches", "swap_cache",
 ]
 
 
-def collect_no_aqe(df: DataFrame) -> list:
-    """``collect()`` with AQE scoped OFF (set/restore around one action).
+def conf_session(spark: SparkSession, **conf: str) -> SparkSession:
+    """A clone of ``spark`` with ``conf`` set on top of its current settings.
 
-    For a fixed-shape tiny-output aggregate — a k×d k-means update, a
-    one-row convergence checksum — adaptive execution can neither
-    coalesce anything useful nor hit skew at ANY scale; it only splits
-    the action into an extra shuffle-stage job (2 jobs instead of 1,
-    measured at sf0.01 with identical wall time).  Scoping the conf
-    around a single driver-side action follows streaming's
-    ``_scoped_state_parallelism``.  The flip is SESSION-GLOBAL, not
-    scoped to this action: any query that another driver thread plans
-    on the same session while the window is open also runs without
-    AQE, and two overlapping windows can restore each other's value."""
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "false")
-    try:
-        return df.collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    The one way library code runs something under a temporary SQL conf:
+    the override lives in the clone, so the caller's session is never
+    written and a query another driver thread plans meanwhile keeps the
+    caller's conf.  ``cloneSession`` copies every runtime setting, temp
+    view and registered function and shares the SparkContext; it costs
+    ~3 ms (the first call in a JVM up to ~0.5 s).  Pass conf keys with
+    ``**{"spark.sql....": "v"}``.  Re-plan a frame there with
+    :func:`rebind`."""
+    to_df = RDD.toDF
+    session = SparkSession(
+        spark.sparkContext, spark._jsparkSession.cloneSession()
+    )
+    RDD.toDF = to_df  # the constructor re-points every rdd.toDF() at it
+    for key, value in conf.items():
+        session.conf.set(key, value)  # the clone's conf only
+    return session
+
+
+def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df`` re-planned in ``session``: optimized, physically planned and
+    executed under ``session``'s conf.  The ANALYZED plan moves, so names
+    stay bound to what ``df`` resolved them to — a temp view that exists
+    only in the other session, a parquet schema read under a clone's
+    conf (the raw logical plan of ``read.parquet`` or ``table(name)`` is
+    unresolved and would be looked up again in ``session``)."""
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.queryExecution().analyzed()
+    )
+    return DataFrame(jdf, session)
 
 
 # Session-cache lifecycle (VERDICT r11 "what's wrong" #2): every

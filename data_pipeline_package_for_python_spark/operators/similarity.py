@@ -60,7 +60,8 @@ __all__ = [
 ]
 
 
-from ._util import collect_no_aqe as _collect_no_aqe
+from ._util import conf_session as _conf_session
+from ._util import rebind as _rebind
 from ._util import register_session_cache as _register_session_cache
 from ._util import sweep_session_caches as _sweep_session_caches
 
@@ -1066,20 +1067,25 @@ def kmeans_embeddings_exact(
     # rejected forms, same probe: flat-expanded squared distances
     # (codegen fallback, 4-5× slower than the zip_with HOF) and the
     # centroid matrix as ONE nested-array literal (py4j/analysis of the
-    # nested literal ~5× the literal-SQL build).  What stays: AQE is
-    # disabled around the update collect (scoped set/restore, the
-    # streaming _scoped_state_parallelism precedent) — the update is a
-    # FIXED k×d-group two-stage aggregate whose output is k×d rows, so
-    # runtime re-planning can neither coalesce anything useful nor hit
-    # skew at ANY scale, and dropping it halves the per-iteration job
-    # count (2 → 1, same-or-better wall, measured).
+    # nested literal ~5× the literal-SQL build).  What stays: the update
+    # collect runs in a per-call session clone with AQE off — the update
+    # is a FIXED k×d-group two-stage aggregate whose output is k×d rows,
+    # so runtime re-planning can neither coalesce anything useful nor
+    # hit skew at ANY scale, and dropping it halves the per-iteration job
+    # count (2 → 1, same-or-better wall, measured).  Only the clone's
+    # conf says so: the caller's session keeps AQE on, and so does any
+    # query another driver thread plans meanwhile.
+    no_aqe = _conf_session(
+        vecs.sparkSession, **{"spark.sql.adaptive.enabled": "false"}
+    )
     for _ in range(iterations):
-        sums = _collect_no_aqe(
+        sums = _rebind(
             assign(vecs)
             .select("cluster", F.posexplode(F.col("__u")).alias("pos", "x"))
             .groupBy("cluster", "pos")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-        )
+            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")),
+            no_aqe,
+        ).collect()
         new_centroids = [list(c) for c in centroids]
         for r in sums:
             # Python // floors toward -inf, matching DuckDB's // on the

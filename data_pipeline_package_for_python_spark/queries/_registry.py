@@ -22,6 +22,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import read_events
+
 __all__ = ["Query", "QUERIES", "query", "load", "dsum", "davg", "dmul"]
 
 
@@ -57,9 +59,11 @@ _SCAN_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     # The grading driver may hand us a session it built itself; every
-    # timestamp normalization below (NTZ→TIMESTAMP cast, unix_micros
+    # timestamp normalization (NTZ→TIMESTAMP cast, unix_micros
     # bucketing) is only value-preserving under a UTC session timezone,
-    # so pin it here rather than trusting session.py to have run.
+    # so pin it here rather than trusting session.py to have run.  This
+    # is a session invariant, not a temporary override: it is set once
+    # and never restored, so it stays on the caller's session.
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     cache_key = (sf_dir, table)
@@ -67,35 +71,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if cached is not None and cached.sparkSession is spark:
         return cached
     if table == "events":
-        # events.ts arrives in whatever precision/annotation the fixture
-        # generator used; normalize to a plain TimestampType (session TZ
-        # is pinned to UTC) so every downstream op — unix_micros windows,
-        # watermarks, epoch-floor buckets — sees one canonical type:
-        #  * TIMESTAMP_NS parquet is rejected by default
-        #    (PARQUET_TYPE_ILLEGAL) — read nanos as long, floor-divide to
-        #    µs, exactly DuckDB's CAST(TIMESTAMP_NS AS TIMESTAMP);
-        #  * µs parquet with isAdjustedToUTC=false infers TIMESTAMP_NTZ —
-        #    cast to TIMESTAMP (value-preserving under the UTC session).
-        # The legacy flag is consumed at schema resolution (inside
-        # spark.read.parquet), so scope it tightly and restore whatever
-        # was set before — session config must not leak out of a loader.
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true")
-        try:
-            df = spark.read.parquet(f"{sf_dir}/events.parquet")
-            ts_type = dict(df.dtypes).get("ts")
-            if ts_type == "bigint":
-                df = df.withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
-                )
-            elif ts_type == "timestamp_ntz":
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
+        df = read_events(spark, f"{sf_dir}/events.parquet")
     else:
         df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     _SCAN_CACHE[cache_key] = df

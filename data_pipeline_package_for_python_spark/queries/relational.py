@@ -1340,7 +1340,10 @@ def bucketed_order_tables(spark, sf_dir: str, n_buckets: int = 8):
     # and exactly one file per bucket (guaranteed by the repartition
     # below), sort-merge joins over the pair skip BOTH local sorts:
     # the r10 sf1 measurement flipped from 0.48x to ~1.3x of the
-    # shipped plan on exactly this.
+    # shipped plan on exactly this.  Set on the CALLER's session, not a
+    # clone (the docstring's warning): a join plans in the session of its
+    # left operand, and the consumers join these tables with dimension
+    # frames of the caller's session.
     spark.conf.set(
         "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
     )
@@ -1481,6 +1484,7 @@ def release_bucketed_order_tables(spark) -> int:
             released += 1
         shutil.rmtree(base, ignore_errors=True)
     try:
+        # undoes the flag bucketed_order_tables left on this session
         spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
     except Exception:
         pass  # session already stopped — nothing to restore
@@ -2843,18 +2847,11 @@ def sink_partition_overwrite(spark, sf_dir):
         )
         .withColumn("o_totalprice", F.col("o_totalprice") + 1000)
     )
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        batch.write.mode("overwrite").partitionBy(
-            "o_orderstatus"
-        ).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
+    # the per-write option, not the session conf: only this write is
+    # dynamic, and nothing another driver thread writes changes mode
+    batch.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("o_orderstatus").parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),

@@ -16,13 +16,17 @@ At 100 TB the decisions that matter are made HERE:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from ..operators._util import conf_session, rebind
 
 __all__ = [
     "TPCH_TABLES",
     "prepare_media_dir",
     "read_binary_files",
     "read_csv",
+    "read_events",
     "read_jdbc",
     "read_json",
     "read_parquet",
@@ -45,6 +49,32 @@ TPCH_TABLES = (
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
+
+
+def read_events(spark: SparkSession, path: str) -> DataFrame:
+    """The events parquet at ``path`` with ``ts`` as a plain TIMESTAMP.
+
+    ``ts`` arrives in whatever precision/annotation the fixture generator
+    used; every downstream op (unix_micros windows, watermarks,
+    epoch-floor buckets, event-time replay) needs one canonical type:
+     * TIMESTAMP_NS parquet is rejected by default (PARQUET_TYPE_ILLEGAL)
+       — read nanos as long, floor-divide to µs, exactly DuckDB's
+       CAST(TIMESTAMP_NS AS TIMESTAMP);
+     * µs parquet with isAdjustedToUTC=false infers TIMESTAMP_NTZ — cast
+       to TIMESTAMP (value-preserving under a UTC session).
+    The legacy ``nanosAsLong`` flag is consumed at schema resolution, so
+    the read runs in a session clone carrying it and the frame is
+    re-planned in ``spark``, whose conf is never written."""
+    reader = conf_session(
+        spark, **{"spark.sql.legacy.parquet.nanosAsLong": "true"}
+    )
+    df = reader.read.parquet(path)
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return rebind(df, spark)
 
 
 def read_csv(

@@ -28,7 +28,9 @@ results against DuckDB.
 
 from __future__ import annotations
 
+import ast
 import os
+import shutil
 import tempfile
 import threading
 import time
@@ -36,6 +38,10 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from ..operators._util import conf_session, rebind
+from ..sources import read_events
 
 __all__ = [
     "EVENTS_DDL",
@@ -94,64 +100,48 @@ def prepare_events_stream_dir(
     out = os.path.join(base, f"{tag}_events_{n_files}")
     if os.path.exists(os.path.join(out, "_SUCCESS")):
         return out
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # µs parquet annotated isAdjustedToUTC=false infers NTZ; event
-            # time / watermarks / unix_micros need plain TIMESTAMP (UTC
-            # session makes the cast value-preserving).
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        # split by event-time order so each staged file is a contiguous time
-        # range -> oldest-file-first replay is a realistic arrival order
-        from pyspark.sql.window import Window
+    df = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    # split by event-time order so each staged file is a contiguous time
+    # range -> oldest-file-first replay is a realistic arrival order
+    from pyspark.sql.window import Window
 
-        df = df.withColumn(
-            "_bucket",
-            F.ntile(n_files).over(Window.orderBy("ts", "event_id")),
-        )
-        # One contiguous time range per FILE, and lexicographic file
-        # order == time order: repartitionByRange maps the n_files
-        # bucket values monotonically onto n_files partitions, so
-        # part-00000 is the oldest slice.  (A plain repartition(col)
-        # HASHES the bucket id — at sf0.1 buckets 1 and 3 collided into
-        # part-00000, the replay delivered Jan-23 data before Jan-8
-        # data, and the advanced watermark silently dropped thousands
-        # of genuine interval-join matches.  FileStreamSource breaks
-        # equal-mtime ties by path, so partition index IS arrival
-        # order.)
-        (
-            df.repartitionByRange(n_files, "_bucket")
-            .sortWithinPartitions("ts", "event_id")
-            .drop("_bucket")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        # FileStreamSource orders ONLY by modification time — files
-        # written by one job share an mtime (to the µs) and then replay
-        # in arbitrary listing order (observed: file4 before file3,
-        # which advanced the watermark ~7 days early and silently
-        # dropped a third of the interval-join matches as late data).
-        # Strictly increasing mtimes in partition order make arrival
-        # order == event-time order, the property every oracle here
-        # assumes.
-        parts = sorted(
-            f for f in os.listdir(out)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        t0 = time.time() - 60.0
-        for i, fname in enumerate(parts):
-            fpath = os.path.join(out, fname)
-            os.utime(fpath, (t0 + 10.0 * i, t0 + 10.0 * i))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+    df = df.withColumn(
+        "_bucket",
+        F.ntile(n_files).over(Window.orderBy("ts", "event_id")),
+    )
+    # One contiguous time range per FILE, and lexicographic file
+    # order == time order: repartitionByRange maps the n_files
+    # bucket values monotonically onto n_files partitions, so
+    # part-00000 is the oldest slice.  (A plain repartition(col)
+    # HASHES the bucket id — at sf0.1 buckets 1 and 3 collided into
+    # part-00000, the replay delivered Jan-23 data before Jan-8
+    # data, and the advanced watermark silently dropped thousands
+    # of genuine interval-join matches.  FileStreamSource breaks
+    # equal-mtime ties by path, so partition index IS arrival
+    # order.)
+    (
+        df.repartitionByRange(n_files, "_bucket")
+        .sortWithinPartitions("ts", "event_id")
+        .drop("_bucket")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+    # FileStreamSource orders ONLY by modification time — files
+    # written by one job share an mtime (to the µs) and then replay
+    # in arbitrary listing order (observed: file4 before file3,
+    # which advanced the watermark ~7 days early and silently
+    # dropped a third of the interval-join matches as late data).
+    # Strictly increasing mtimes in partition order make arrival
+    # order == event-time order, the property every oracle here
+    # assumes.
+    parts = sorted(
+        f for f in os.listdir(out)
+        if f.startswith("part-") and f.endswith(".parquet")
+    )
+    t0 = time.time() - 60.0
+    for i, fname in enumerate(parts):
+        fpath = os.path.join(out, fname)
+        os.utime(fpath, (t0 + 10.0 * i, t0 + 10.0 * i))
     return out
 
 
@@ -374,34 +364,38 @@ def stream_stream_interval_join(
     return l.join(r, cond, how).drop(r[on])
 
 
-class _scoped_state_parallelism:
-    """Harness-only: start a streaming query with a small state-store
-    parallelism, then restore the session default.
+def _harness_session(
+    spark: SparkSession, state_partitions: int | None, **conf: str
+) -> SparkSession:
+    """Harness-only: the session clone a drain query starts in.
 
     A stateful streaming op creates one state-store instance per shuffle
     partition *per micro-batch* (checkpoint delta files, store init/commit);
     at harness scale (sf≤0.01, thousands of rows) the session's default 32
     partitions are pure fixed cost — measured ~2× of the drain wall time.
     The partition count is pinned into the query's checkpoint at START, so
-    scoping the conf around ``start()`` is sufficient and thread-safe here
-    (the harness runs queries sequentially).  Production flows never pass
-    through this helper and keep the session/cluster setting.
-    """
+    a clone carrying ``state_partitions`` (None keeps the caller's value)
+    right-sizes the query while the caller's session keeps its own conf.
+    Production flows never pass through this helper."""
+    if state_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    return conf_session(spark, **conf)
 
-    KEY = "spark.sql.shuffle.partitions"
 
-    def __init__(self, spark: SparkSession, n: int = 4):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(self.KEY, None)
-        self.spark.conf.set(self.KEY, str(self.n))
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self.KEY)
-        else:
-            self.spark.conf.set(self.KEY, self.prev)
+def _run_query(writer, wait: Callable) -> StreamingQuery:
+    """Start ``writer`` on a fresh checkpoint dir, ``wait(query)``, then
+    stop the query and delete the dir: a harness query is drained once
+    and never resumed, so its checkpoint is garbage afterwards."""
+    ckpt = tempfile.mkdtemp(prefix="dpp_ckpt_")
+    q = None
+    try:
+        q = writer.option("checkpointLocation", ckpt).start()
+        wait(q)
+    finally:
+        if q is not None and q.isActive:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return q
 
 
 def run_available_now(
@@ -420,30 +414,23 @@ def run_available_now(
     session default).  If ``progress_out`` is a list, the query's
     per-micro-batch progress dicts are appended to it (watermark and
     state-store metrics — lets tests assert bounded-state contracts).
+    The query runs in a session clone, so the sink's view lives there
+    and the caller's catalog does not grow; the returned frame is bound
+    to the caller's session.
     """
     spark = result.sparkSession
+    child = _harness_session(spark, state_partitions)
     name = _unique_name("dpp_mem")
-    ckpt = tempfile.mkdtemp(prefix="dpp_ckpt_")
-    writer = (
-        result.writeStream.format("memory")
+    q = _run_query(
+        rebind(result, child).writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True),
+        lambda q: q.awaitTermination(timeout_s),
     )
-    if state_partitions is None:
-        q = writer.start()
-    else:
-        with _scoped_state_parallelism(spark, state_partitions):
-            q = writer.start()
-    try:
-        q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
     if progress_out is not None:
         progress_out.extend(q.recentProgress)
-    return spark.table(name)
+    return rebind(child.table(name), spark)
 
 
 def foreach_batch_parquet(
@@ -463,22 +450,12 @@ def foreach_batch_parquet(
         out = transform(batch_df) if transform is not None else batch_df
         out.write.mode("append").parquet(path)
 
-    ckpt = tempfile.mkdtemp(prefix="dpp_ckpt_fb_")
-    writer = (
-        stream.writeStream.foreachBatch(_write)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
+    child = _harness_session(stream.sparkSession, state_partitions)
+    _run_query(
+        rebind(stream, child).writeStream.foreachBatch(_write)
+        .trigger(availableNow=True),
+        lambda q: q.awaitTermination(timeout_s),
     )
-    if state_partitions is None:
-        q = writer.start()
-    else:
-        with _scoped_state_parallelism(stream.sparkSession, state_partitions):
-            q = writer.start()
-    try:
-        q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 # --------------------------------------------------------------------- #
@@ -572,6 +549,38 @@ def cascade_agg(
     )
 
 
+def _drain(q, is_drained, timeout_s: float, poll_s: float) -> None:
+    """Poll ``q`` until ``is_drained(last_source_progress)`` holds on a
+    batch that processed 0 rows, or ``timeout_s`` passes.  Offsets arrive
+    as JSON-ish strings OR dicts depending on the source, so a string
+    ``endOffset`` is parsed before the predicate sees the dict."""
+    deadline = time.time() + timeout_s
+    while time.time() < deadline:
+        time.sleep(poll_s)
+        if q.exception():
+            raise q.exception()
+        p = q.lastProgress
+        if not p or not p.get("sources"):
+            continue
+        src = dict(p["sources"][0])
+        eo = src.get("endOffset")
+        if isinstance(eo, str):
+            try:
+                src["endOffset"] = ast.literal_eval(eo)
+            except (ValueError, SyntaxError):
+                pass
+        if is_drained(src) and p.get("numInputRows", -1) == 0:
+            return
+
+
+# The drain predicate needs a PROGRESS EVENT for the final empty batch,
+# but Spark throttles no-data progress reporting to one event per 10 s
+# (noDataProgressEventInterval) — measured as a flat 10 s observability
+# stall after the source was already exhausted.  Drain queries start in a
+# clone that reports promptly.
+_PROMPT_NODATA = {"spark.sql.streaming.noDataProgressEventInterval": "100ms"}
+
+
 def run_until_offset(
     result: DataFrame,
     is_drained,
@@ -592,59 +601,17 @@ def run_until_offset(
     source, so the predicate receives the raw progress dict and
     decides.
     """
-    import ast
-    import time as _time
-
     spark = result.sparkSession
+    child = _harness_session(spark, 4, **_PROMPT_NODATA)
     name = _unique_name("dpp_mem")
-    ckpt = tempfile.mkdtemp(prefix="dpp_ckpt_")
-    # The drain predicate needs a PROGRESS EVENT for the final empty
-    # batch, but Spark throttles no-data progress reporting to one
-    # event per 10 s (noDataProgressEventInterval) — measured as a
-    # flat 10 s observability stall after the source was already
-    # exhausted.  Report promptly for the drain loop's lifetime.
-    _NODATA_KEY = "spark.sql.streaming.noDataProgressEventInterval"
-    prev_nodata = spark.conf.get(_NODATA_KEY, None)
-    spark.conf.set(_NODATA_KEY, "100ms")
-    # query start lives INSIDE the protected region: if start() raises,
-    # the finally below still restores the session-wide conf override
-    # (round-4 advice — the set-before-try shape leaked it permanently).
-    q = None
-    try:
-        with _scoped_state_parallelism(spark, 4):
-            q = (
-                result.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(processingTime="50 milliseconds")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-        deadline = _time.time() + timeout_s
-        while _time.time() < deadline:
-            _time.sleep(poll_s)
-            if q.exception():
-                raise q.exception()
-            p = q.lastProgress
-            if not p or not p.get("sources"):
-                continue
-            src = dict(p["sources"][0])
-            eo = src.get("endOffset")
-            if isinstance(eo, str):
-                try:
-                    src["endOffset"] = ast.literal_eval(eo)
-                except (ValueError, SyntaxError):
-                    pass
-            if is_drained(src) and p.get("numInputRows", -1) == 0:
-                break
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        if prev_nodata is None:
-            spark.conf.unset(_NODATA_KEY)
-        else:
-            spark.conf.set(_NODATA_KEY, prev_nodata)
-    return spark.table(name)
+    _run_query(
+        rebind(result, child).writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(processingTime="50 milliseconds"),
+        lambda q: _drain(q, is_drained, timeout_s, poll_s),
+    )
+    return rebind(child.table(name), spark)
 
 
 def drain_to_sink(
@@ -661,47 +628,11 @@ def drain_to_sink(
     DataSourceStreamWriter) instead of the in-memory table, with the
     same offset-predicate drain loop and prompt no-data progress
     reporting.  Returns nothing — the sink's files ARE the output."""
-    import ast
-    import time as _time
-
-    spark = result.sparkSession
-    ckpt = tempfile.mkdtemp(prefix="dpp_ckpt_")
-    _NODATA_KEY = "spark.sql.streaming.noDataProgressEventInterval"
-    prev_nodata = spark.conf.get(_NODATA_KEY, None)
-    spark.conf.set(_NODATA_KEY, "100ms")
-    # start() inside the protected region — see run_until_offset.
-    q = None
-    try:
-        with _scoped_state_parallelism(spark, 4):
-            q = (
-                result.writeStream.format(fmt)
-                .options(**options)
-                .outputMode(output_mode)
-                .trigger(processingTime="50 milliseconds")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-        deadline = _time.time() + timeout_s
-        while _time.time() < deadline:
-            _time.sleep(poll_s)
-            if q.exception():
-                raise q.exception()
-            p = q.lastProgress
-            if not p or not p.get("sources"):
-                continue
-            src = dict(p["sources"][0])
-            eo = src.get("endOffset")
-            if isinstance(eo, str):
-                try:
-                    src["endOffset"] = ast.literal_eval(eo)
-                except (ValueError, SyntaxError):
-                    pass
-            if is_drained(src) and p.get("numInputRows", -1) == 0:
-                break
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        if prev_nodata is None:
-            spark.conf.unset(_NODATA_KEY)
-        else:
-            spark.conf.set(_NODATA_KEY, prev_nodata)
+    child = _harness_session(result.sparkSession, 4, **_PROMPT_NODATA)
+    _run_query(
+        rebind(result, child).writeStream.format(fmt)
+        .options(**options)
+        .outputMode(output_mode)
+        .trigger(processingTime="50 milliseconds"),
+        lambda q: _drain(q, is_drained, timeout_s, poll_s),
+    )

@@ -484,3 +484,81 @@ def test_staged_files_replay_in_event_time_order(spark, stream_dir):
         if prev_mtime is not None:
             assert mt > prev_mtime, (f, mt, prev_mtime)
         prev_mtime = mt
+
+
+def _small_stream(spark, tmp_path):
+    src = str(tmp_path / "small_src")
+    spark.range(10).write.parquet(src)
+    return spark.readStream.schema("id bigint").parquet(src)
+
+
+def test_available_now_removes_its_checkpoint(spark, tmp_path, monkeypatch):
+    # the harness mints its checkpoint with tempfile.mkdtemp; an
+    # AvailableNow drain is never resumed, so nothing may be left behind
+    import tempfile
+
+    ckpt_root = tmp_path / "tmp"
+    ckpt_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(ckpt_root))
+    out = run_available_now(_small_stream(spark, tmp_path))
+    assert out.count() == 10
+    assert not [p for p in os.listdir(ckpt_root) if p.startswith("dpp_ckpt_")]
+
+
+def test_available_now_leaves_caller_session_alone(spark, tmp_path):
+    # the drain query runs in a session clone: the caller stays the active
+    # session, its catalog gains no memory-sink view, and its shuffle
+    # partitions keep their value while the query ran with 3
+    from pyspark.sql import SparkSession
+
+    before = {t.name for t in spark.catalog.listTables()}
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    progress: list = []
+    agg = _small_stream(spark, tmp_path).groupBy(F.col("id") % 2).count()
+    out = run_available_now(
+        agg, output_mode="complete", state_partitions=3,
+        progress_out=progress,
+    )
+    assert sorted(r["count"] for r in out.collect()) == [5, 5]
+    assert out.sparkSession is spark
+    assert SparkSession.getActiveSession() is spark
+    assert {t.name for t in spark.catalog.listTables()} == before
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert progress[-1]["stateOperators"][0]["numShufflePartitions"] == 3
+
+
+def test_nanosecond_events_normalize_to_micros(spark, tmp_path):
+    # TIMESTAMP(NANOS) parquet — the one events encoding no committed
+    # fixture has — must come out of both readers as a plain TIMESTAMP
+    # floored to µs, DuckDB's CAST(TIMESTAMP_NS AS TIMESTAMP)
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_package_for_python_spark.queries._registry import load
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_000_999_999_999]
+    table = pa.table({
+        "event_id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array(ns, pa.timestamp("ns")),
+    })
+    sf = tmp_path / "sf_ns"
+    sf.mkdir()
+    pq.write_table(table, str(sf / "events.parquet"), version="2.6")
+    want = [
+        (1, dt.datetime(2023, 11, 14, 22, 13, 20, 123456)),
+        (2, dt.datetime(2023, 11, 14, 22, 13, 20, 999999)),
+    ]
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(nanos, None)
+
+    loaded = load(spark, str(sf), "events")
+    staged = spark.read.parquet(prepare_events_stream_dir(
+        spark, str(sf), n_files=2, base=str(tmp_path / "stage")
+    ))
+    for df in (loaded, staged):
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = sorted((r["event_id"], r["ts"]) for r in df.collect())
+        assert got == want
+    assert spark.conf.get(nanos, None) == before

@@ -158,7 +158,11 @@ def main() -> int:
 
     from data_pipeline_package_for_python_spark.session import get_spark
 
-    spark = get_spark(app_name="check-correctness")
+    # no console progress bar: it would land on the verdict lines
+    spark = get_spark(
+        app_name="check-correctness",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
 
     def fresh_con():
         """One DuckDB connection PER QUERY.  A single connection reused
