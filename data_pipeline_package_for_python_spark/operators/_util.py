@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 import threading
 
 from pyspark import RDD
@@ -9,7 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "conf_session", "ensure_parallel", "md5_key_expr", "rebind",
-    "register_session_cache", "sweep_session_caches", "swap_cache",
+    "register_session_cache", "scratch_dir", "sweep_session_caches",
+    "swap_cache",
 ]
 
 
@@ -45,6 +50,32 @@ def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
         session._jsparkSession, df._jdf.queryExecution().analyzed()
     )
     return DataFrame(jdf, session)
+
+
+_SCRATCH_LOCK = threading.Lock()
+_scratch_root: tuple[int, str] | None = None  # (owner pid, root dir)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new empty directory for files a query stages or writes.
+
+    Every one lives under a single per-process root in the temp dir
+    (``$TMPDIR``), which an ``atexit`` handler removes, so staged tables,
+    sinks and checkpoints do not outlive the process that made them.
+    The root belongs to the process that created it: a forked child
+    makes its own and never removes its parent's."""
+    global _scratch_root
+    with _SCRATCH_LOCK:
+        if _scratch_root is None or _scratch_root[0] != os.getpid():
+            _scratch_root = (os.getpid(), tempfile.mkdtemp(prefix="dpp_"))
+            atexit.register(_remove_scratch_root, *_scratch_root)
+        root = _scratch_root[1]
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def _remove_scratch_root(pid: int, root: str) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 # Session-cache lifecycle (VERDICT r11 "what's wrong" #2): every

@@ -339,9 +339,12 @@ def cap_per_group(
     Hash rank ≈ a uniform random draw, but reproducible across runs
     and engines (the kept set itself hash-checks) and stable under
     corpus growth for the rows already ranked.  Routed through the
-    salted two-phase top-k (operators/skew.py): domains are exactly
-    the hot-key case — one mega-host must not serialize through a
-    single reducer at 100 TB.
+    salted two-phase top-k (operators/skew.py), not the plain
+    ``topk_per_group``: ``n`` is the caller's choice and can exceed
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000), above
+    which Spark plans no partial limit — and domains are exactly the
+    hot-key case, so one mega-host would then sort all its rows on a
+    single reducer.
     """
     from .skew import salted_topk_per_group
 

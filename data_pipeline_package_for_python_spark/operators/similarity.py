@@ -28,7 +28,7 @@ north-star extension rows "Similarity search" of SURVEY §2.2.10.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -64,6 +64,7 @@ from ._util import conf_session as _conf_session
 from ._util import rebind as _rebind
 from ._util import register_session_cache as _register_session_cache
 from ._util import sweep_session_caches as _sweep_session_caches
+from .skew import topk_per_group as _topk_per_group
 
 
 def dot(a: str, b: str) -> F.Column:
@@ -87,25 +88,20 @@ def l2_norm(a: str) -> F.Column:
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
     """(query_id, rank, neighbor_id, cosine) top-k per query.
 
-    Routed through the salted two-phase operator: a plain window over
-    query_id funnels every scored candidate into |queries| reducers —
-    pathological for a handful of queries against a 100 TB corpus.  The
-    salted phase keeps all sorts balanced; the final rank runs on ≤
-    queries × buckets × k survivors.
+    One ``skew.topk_per_group`` window whose row number is the rank.
+    A handful of queries against a large corpus would funnel every
+    scored candidate into |queries| reducers, but Spark's window group
+    limit (k ≤ ``spark.sql.optimizer.windowGroupLimitThreshold``, 1000)
+    keeps each map partition's top-k per query before the exchange, so
+    the exchange carries ≤ partitions × queries × k rows.
     """
-    from .skew import salted_topk_per_group
-
-    order = [F.col("cosine").desc(), F.col("neighbor_id")]
-    topk = salted_topk_per_group(
+    return _topk_per_group(
         scored.select("query_id", "neighbor_id", "cosine"),
         ["query_id"],
-        order,
+        [F.col("cosine").desc(), F.col("neighbor_id")],
         k,
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return topk.withColumn("rank", F.row_number().over(w)).select(
-        "query_id", "rank", "neighbor_id", "cosine"
-    )
+        rank_col="rank",
+    ).select("query_id", "rank", "neighbor_id", "cosine")
 
 
 def cosine_topk(
@@ -367,18 +363,17 @@ def ivf_assign(
                 F.lit(1).alias("cell_rank"),
             )
         )
-    w = Window.partitionBy("__id").orderBy(
-        F.col("__sim").desc(), F.col("cell_id")
-    )
-    return (
-        scored.withColumn("cell_rank", F.row_number().over(w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select(
-            F.col("__id").alias(id_col),
-            F.col("__v").alias(vec_col),
-            F.col("cell_id").alias("cell"),
-            "cell_rank",
-        )
+    return _topk_per_group(
+        scored,
+        ["__id"],
+        [F.col("__sim").desc(), F.col("cell_id")],
+        n_probe,
+        rank_col="cell_rank",
+    ).select(
+        F.col("__id").alias(id_col),
+        F.col("__v").alias(vec_col),
+        F.col("cell_id").alias("cell"),
+        "cell_rank",
     )
 
 
@@ -867,14 +862,13 @@ def rrf_fuse(
         ).alias("rrf_score_e12"),
         F.count(F.lit(1)).alias("n_sources"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score_e12").desc(), F.col("doc_id").asc()
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "rrf_score_e12", "n_sources")
-    )
+    return _topk_per_group(
+        fused,
+        ["query_id"],
+        [F.col("rrf_score_e12").desc(), F.col("doc_id").asc()],
+        k,
+        rank_col="rank",
+    ).select("query_id", "rank", "doc_id", "rrf_score_e12", "n_sources")
 
 
 def semantic_dedup(
@@ -1182,24 +1176,17 @@ def sq8_topk(
             "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
         ),
     )
-    from .skew import salted_topk_per_group
-
-    short = salted_topk_per_group(
+    short = _topk_per_group(
         scored.select("query_id", "neighbor_id", "qscore", "qv", "cv"),
         ["query_id"],
         [F.col("qscore").desc(), F.col("neighbor_id")],
         shortlist,
     )
-    reranked = short.withColumn(
-        "cosine", dot("qv", "cv") / (l2_norm("qv") * l2_norm("cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return _ranked_topk(
+        short.withColumn(
+            "cosine", dot("qv", "cv") / (l2_norm("qv") * l2_norm("cv"))
+        ),
+        k,
     )
 
 
@@ -1421,14 +1408,13 @@ def hard_negatives(
     join: candidates are restricted to the anchor's random-hyperplane
     LSH bucket (equality join on bucket, anchor side broadcast), the
     label-mismatch predicate and the exact-cosine re-rank run inside
-    that join's codegen stage, and the final per-anchor top-k goes
-    through the salted two-phase operator so a handful of anchors
+    that join's codegen stage, and the final per-anchor top-k is one
+    ``skew.topk_per_group`` window: Spark limits each map partition to
+    its top-k per anchor before the exchange, so a handful of anchors
     never serialize a 100 TB corpus through single reducers.
     Returns (anchor_id, anchor_label, rank, negative_id,
     negative_label, cosine).
     """
-    from .skew import salted_topk_per_group
-
     qb = hyperplane_buckets(
         anchors, id_col=id_col, vec_col=vec_col, dim=dim,
         n_bits=n_bits, seed=seed, keep=(label_col,),
@@ -1458,10 +1444,13 @@ def hard_negatives(
             "negative_label", "cosine",
         )
     )
-    order = [F.col("cosine").desc(), F.col("negative_id")]
-    topk = salted_topk_per_group(scored, ["anchor_id"], order, k)
-    w = Window.partitionBy("anchor_id").orderBy(*order)
-    return topk.withColumn("rank", F.row_number().over(w)).select(
+    return _topk_per_group(
+        scored,
+        ["anchor_id"],
+        [F.col("cosine").desc(), F.col("negative_id")],
+        k,
+        rank_col="rank",
+    ).select(
         "anchor_id", "anchor_label", "rank", "negative_id",
         "negative_label", "cosine",
     )
@@ -1581,7 +1570,7 @@ def pq_topk(
     query-side LUT is computed on the (small) query frame and ships in
     the same broadcast as the queries; scoring reads 4 bytes per
     corpus vector instead of 256 — the memory-bandwidth win PQ exists
-    for.  Same broadcast-queries + salted-top-k posture as sq8_topk.
+    for.  Same broadcast-queries + per-query top-k posture as sq8_topk.
     """
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
@@ -1671,24 +1660,17 @@ def pq_topk(
         F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
     ).withColumn("adc", adc.cast("bigint"))
 
-    from .skew import salted_topk_per_group
-
-    short = salted_topk_per_group(
+    short = _topk_per_group(
         scored.select("query_id", "neighbor_id", "adc", "qv", "cv"),
         ["query_id"],
         [F.col("adc").asc(), F.col("neighbor_id")],
         shortlist,
     )
-    reranked = short.withColumn(
-        "cosine", dot("qv", "cv") / (l2_norm("qv") * l2_norm("cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return _ranked_topk(
+        short.withColumn(
+            "cosine", dot("qv", "cv") / (l2_norm("qv") * l2_norm("cv"))
+        ),
+        k,
     )
 
 

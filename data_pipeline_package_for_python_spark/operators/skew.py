@@ -5,19 +5,58 @@ AQE's skew-join splitting (`spark.sql.adaptive.skewJoin.enabled`, on by
 default in our session factory) handles most skew at runtime; explicit
 salting remains necessary for skewed *aggregations* and for joins where one
 hot key dominates an entire executor.
+
+Top-k per group needs no hand-built phases while k is small: Spark's
+``InferWindowGroupLimit`` rule turns a ``row_number() <= k`` filter into a
+``WindowGroupLimit`` pair — ``Partial`` below the exchange, ``Final`` above
+it — as long as k is at most ``spark.sql.optimizer.windowGroupLimitThreshold``
+(1000 by default).  Each map partition then ships at most groups × k rows,
+however few the groups; :func:`topk_per_group` is that plan.  Above the
+threshold Spark plans no partial limit and a low-cardinality group sorts
+all its rows on one reducer; :func:`salted_topk_per_group` is for caps the
+caller chooses and that can exceed it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
     "explode_salt_join",
-    "local_topk_per_group",
     "salted_groupby_agg",
     "salted_topk_per_group",
+    "topk_per_group",
 ]
+
+
+def topk_per_group(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list,
+    k: int,
+    *,
+    rank_col: str | None = None,
+) -> DataFrame:
+    """The first ``k`` rows of every group in ``order_cols`` order.
+
+    One ``row_number()`` window plus the ``<= k`` filter.  For k up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default)
+    Spark's ``InferWindowGroupLimit`` plans a ``WindowGroupLimit Partial``
+    before the exchange and a ``Final`` after it, so each map partition
+    ships at most groups × k rows: the local-top-k-then-merge shape, with
+    no salt and no Python.  For a larger k use
+    :func:`salted_topk_per_group`.
+
+    ``order_cols`` are column names or expressions (``F.col(c).desc()``,
+    computed keys); make them a total order (add a tie-break key) for a
+    deterministic result.  With ``rank_col`` the row number stays as that
+    column (1..k); otherwise the output has ``df``'s columns.
+    """
+    rn = rank_col or "__rn"
+    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
+    out = df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= k)
+    return out if rank_col else out.drop(rn)
 
 
 def salted_topk_per_group(
@@ -28,12 +67,14 @@ def salted_topk_per_group(
     *,
     salt_buckets: int = 32,
 ) -> DataFrame:
-    """Top-k rows per group when the group cardinality is LOW.
+    """Top-k rows per group when k can exceed Spark's window group limit.
 
-    A plain ``row_number().over(partitionBy(group))`` with, say, 5
-    distinct groups serializes the entire table through 5 reducers — at
-    100 TB that is 5 sort tasks of 20 TB each.  This runs two balanced
-    phases instead:
+    For ``k <= spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by
+    default) use :func:`topk_per_group`: Spark limits each group map-side
+    itself.  Above it Spark plans no partial limit, so a plain
+    ``row_number().over(partitionBy(group))`` with, say, 5 distinct groups
+    serializes the entire table through 5 reducers — at 100 TB that is 5
+    sort tasks of 20 TB each.  This runs two balanced phases instead:
 
     1. window over ``(group, salt)`` — every bucket sorts ~1/salt_buckets
        of its group and keeps its local top-k;
@@ -45,10 +86,9 @@ def salted_topk_per_group(
     must be a total order (include a tie-break key) for deterministic
     output.  The salt is the input partition id (free, already balanced,
     no ``rand()``), so the plan stays deterministic for a deterministic
-    scan.
+    scan.  Its one caller is ``etl.cap_per_group``, whose cap is the
+    caller's choice.
     """
-    from pyspark.sql import Window
-
     salted = df.withColumn(
         "__salt", F.pmod(F.spark_partition_id(), F.lit(salt_buckets))
     )
@@ -63,66 +103,6 @@ def salted_topk_per_group(
         survivors.withColumn("__rn", F.row_number().over(w2))
         .filter(F.col("__rn") <= k)
         .drop("__rn")
-    )
-
-
-def local_topk_per_group(
-    df: DataFrame,
-    group_cols: list[str],
-    order_spec: list[tuple[str, bool]],
-    k: int,
-) -> DataFrame:
-    """Top-k per low-cardinality group with ZERO phase-1 exchange.
-
-    Same problem as :func:`salted_topk_per_group`, different phase-1
-    physics: instead of shuffling the whole table onto (group, salt)
-    reducers, each input partition combines DOWN to its local top-k per
-    group in place via an Arrow batch scan (``mapInPandas``), and only
-    the ``partitions × groups × k`` survivors go through the final
-    (tiny) window.  The full table crosses NO network at all — the one
-    case where the Python boundary beats a JVM window is when the JVM
-    alternative is a full-fact shuffle and the Python side is a linear
-    local scan (measured at sf0.1: ~30% faster than the 32-bucket
-    salted form; the gap widens on a real cluster where phase-1 shuffle
-    means disk + network).  Exact for the same reason salting is: a
-    global top-k row is its partition's top-k row.
-
-    ``order_spec`` is ``[(column, ascending)]`` — plain names, because
-    the ordering must be expressible to pandas and Spark identically;
-    include a tie-break column for a total order.  Use the salted form
-    when the combiner state (groups × k) does not comfortably fit per
-    task, or when order keys are computed expressions.
-    """
-    names = [c for c, _ in order_spec]
-    asc = [a for _, a in order_spec]
-
-    def combine(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield (
-                    pdf.sort_values(names, ascending=asc)
-                    .groupby(group_cols, sort=False)
-                    .head(k)
-                )
-
-    survivors = df.mapInPandas(combine, df.schema)
-    # final (tiny) exact window as ONE sql() statement — the
-    # withColumn/filter/drop chain costs three eager analyzer passes
-    # per build for the same plan.
-    grp = ", ".join(f"`{c}`" for c in group_cols)
-    order_sql = ", ".join(
-        f"`{c}` {'ASC' if a else 'DESC'}" for c, a in order_spec
-    )
-    cols = ", ".join(f"`{c}`" for c in df.columns)
-    return df.sparkSession.sql(
-        f"""
-        SELECT {cols} FROM (
-          SELECT *, row_number() OVER (
-              PARTITION BY {grp} ORDER BY {order_sql}) AS __rn
-          FROM {{survivors}}
-        ) WHERE __rn <= {int(k)}
-        """,
-        survivors=survivors,
     )
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.timeseries import time_bucket
-from ..operators._util import md5_key_expr
+from ..operators._util import md5_key_expr, scratch_dir
 from ._registry import dsum, load, query
 
 
@@ -212,10 +212,8 @@ def scan_parquet_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconciles them to the union schema with NULLs where a batch
     lacked the column.  The counts pin exactly which half carries
     which column — a silent column drop or misalignment breaks them."""
-    import tempfile
-
     orders = load(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="dpp_evolve_") + "/orders"
+    base = scratch_dir("dpp_evolve_") + "/orders"
     orders.select("o_orderkey", "o_totalprice").write.mode(
         "overwrite"
     ).parquet(f"{base}/batch=1")
@@ -2055,8 +2053,6 @@ def etl_incremental_agg_view(spark, sf_dir):
     stored state; the 100 TB base is never re-read
     (tests/test_plans.py pins exactly one orders.parquet scan, filter
     pushed to the cutoff)."""
-    import tempfile
-
     from ..operators.etl import merge_aggregate_state
 
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
@@ -2082,7 +2078,7 @@ def etl_incremental_agg_view(spark, sf_dir):
 
     o = load(spark, sf_dir, "orders")
     cutoff = "1997-06-01"
-    path = tempfile.mkdtemp(prefix="dpp_aggview_") + "/state"
+    path = scratch_dir("dpp_aggview_") + "/state"
     partial(o.filter(F.col("o_orderdate") < cutoff)).write.mode(
         "overwrite"
     ).parquet(path)

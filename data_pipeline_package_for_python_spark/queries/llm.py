@@ -1963,7 +1963,6 @@ _JPEG_CORPUS_CACHE: dict = _outil.register_session_cache(
 
 
 def _jpeg_corpus_dir(spark, sf_dir: str) -> str:
-    import tempfile
 
     import numpy as np
 
@@ -1973,7 +1972,7 @@ def _jpeg_corpus_dir(spark, sf_dir: str) -> str:
     d = _JPEG_CORPUS_CACHE.get(key)
     if d is None:
         _outil.sweep_session_caches(key[0])
-        d = tempfile.mkdtemp(prefix="dpp_jpeg_corpus_")
+        d = _outil.scratch_dir("dpp_jpeg_corpus_")
         ids = [
             int(r.doc_id)
             for r in load(spark, sf_dir, "documents")

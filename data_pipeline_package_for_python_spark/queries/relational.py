@@ -60,12 +60,10 @@ def scan_parquet_count(spark, sf_dir):
 def scan_csv_roundtrip(spark, sf_dir):
     """orders → CSV (explicit schema + timestamp format) → read back →
     aggregate; lossless round-trip must match the oracle on the original."""
-    import tempfile
-
     from ..sources import read_csv, write_csv
 
     orders = load(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="dpp_csv_") + "/orders"
+    path = _util.scratch_dir("dpp_csv_") + "/orders"
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     write_csv(orders, path, timestamp_format=fmt)
     schema = (
@@ -90,14 +88,12 @@ def scan_csv_roundtrip(spark, sf_dir):
 )
 def scan_json_roundtrip(spark, sf_dir):
     """events → JSONL → read back with explicit schema → grouped agg."""
-    import tempfile
-
     from ..sources import read_json, write_json
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    path = tempfile.mkdtemp(prefix="dpp_json_") + "/events"
+    path = _util.scratch_dir("dpp_json_") + "/events"
     write_json(ev, path)
     back = read_json(
         spark, path, schema="event_id long, event_type string, value double"
@@ -117,10 +113,8 @@ def scan_json_roundtrip(spark, sf_dir):
 )
 def scan_orc_roundtrip(spark, sf_dir):
     """part → ORC → read back → counts."""
-    import tempfile
-
     part = load(spark, sf_dir, "part")
-    path = tempfile.mkdtemp(prefix="dpp_orc_") + "/part"
+    path = _util.scratch_dir("dpp_orc_") + "/part"
     part.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.agg(
@@ -139,10 +133,8 @@ def scan_xml_roundtrip(spark, sf_dir):
     """nation → native XML sink (Spark 4 built-in source, rowTag
     layout) → read back with an explicit schema (no inference pass) →
     full-row compare against the table."""
-    import tempfile
-
     nation = load(spark, sf_dir, "nation")
-    path = tempfile.mkdtemp(prefix="dpp_xml_") + "/nation"
+    path = _util.scratch_dir("dpp_xml_") + "/nation"
     (
         nation.write.format("xml")
         .option("rowTag", "nation")
@@ -174,7 +166,6 @@ def scan_jdbc_roundtrip(spark, sf_dir):
     whole table through one connection).  The database is staged once
     per (session, sf_dir) like the other round-trip fixtures."""
     import os
-    import tempfile
 
     from ..sources import read_jdbc, write_jdbc
 
@@ -182,7 +173,7 @@ def scan_jdbc_roundtrip(spark, sf_dir):
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     url = _JDBC_STAGE.get(key)
     if url is None:
-        db = os.path.join(tempfile.mkdtemp(prefix="dpp_derby_"), "db")
+        db = os.path.join(_util.scratch_dir("dpp_derby_"), "db")
         url = f"jdbc:derby:{db};create=true"
         write_jdbc(
             load(spark, sf_dir, "nation"),
@@ -247,12 +238,10 @@ def scan_python_datasource(spark, sf_dir):
 def sink_partitioned_parquet(spark, sf_dir):
     """Partitioned parquet sink → re-read → per-partition agg.  The layout
     written here is what enables partition pruning at 100 TB."""
-    import tempfile
-
     from ..sources import write_parquet
 
     orders = load(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="dpp_psink_") + "/orders"
+    path = _util.scratch_dir("dpp_psink_") + "/orders"
     write_parquet(orders, path, partition_by=["o_orderstatus"])
     back = spark.read.parquet(path)
     return back.groupBy("o_orderstatus").agg(
@@ -286,7 +275,6 @@ def scan_partition_pruning(spark, sf_dir):
     the difference between reading one directory and reading the
     lake."""
     import os
-    import tempfile
 
     from .. import plans
     from ..sources import write_parquet
@@ -294,7 +282,7 @@ def scan_partition_pruning(spark, sf_dir):
     key = ("prune_stage", sf_dir)
     path = _TEXT_STAGE.get(key)
     if path is None:
-        path = tempfile.mkdtemp(prefix="dpp_prune_") + "/orders"
+        path = _util.scratch_dir("dpp_prune_") + "/orders"
         write_parquet(
             load(spark, sf_dir, "orders"), path,
             partition_by=["o_orderstatus"],
@@ -330,12 +318,10 @@ def sink_zorder_layout(spark, sf_dir):
     pruning power (no single sort order can; pinned by
     tests/test_bucketing.py's row-group stats comparison); this query
     hash-checks that the curve reorder is lossless."""
-    import tempfile
-
     from ..sources import write_zorder_layout
 
     orders = load(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="dpp_zorder_") + "/orders"
+    path = _util.scratch_dir("dpp_zorder_") + "/orders"
     write_zorder_layout(
         orders, path, zorder_by=["o_custkey", "o_totalprice"], n_files=16
     )
@@ -368,15 +354,13 @@ def scan_bucketed_join(spark, sf_dir):
     amortizes over every later join/agg on that key (the 100 TB
     co-location primitive; ``tests/test_bucketing.py`` pins the
     exchange-free plan shape)."""
-    import tempfile
-
     from ..sources import write_bucketed
 
     o = load(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderstatus", "o_totalprice"
     )
     c = load(spark, sf_dir, "customer").select("c_custkey")
-    base = tempfile.mkdtemp(prefix="dpp_bucketed_")
+    base = _util.scratch_dir("dpp_bucketed_")
     write_bucketed(
         o, "dpp_orders_bq", bucket_by="o_custkey", n_buckets=8,
         sort_by="o_custkey", path=f"{base}/orders_b",
@@ -1330,7 +1314,6 @@ def bucketed_order_tables(spark, sf_dir: str, n_buckets: int = 8):
     (session, sf_dir); :func:`release_bucketed_order_tables` is the
     lifecycle path that frees both."""
     import hashlib
-    import tempfile
 
     from ..sources import write_bucketed
 
@@ -1359,7 +1342,7 @@ def bucketed_order_tables(spark, sf_dir: str, n_buckets: int = 8):
             f"{sf_dir}:{n_buckets}".encode()
         ).hexdigest()[:8]
         names = (f"dpp_orders_bko_{suffix}", f"dpp_lineitem_bko_{suffix}")
-        base = tempfile.mkdtemp(prefix="dpp_bko_")
+        base = _util.scratch_dir("dpp_bko_")
         # repartition on the bucket key BEFORE the bucketed write:
         # bucketBy does not shuffle, so each input task otherwise writes
         # its own file per bucket (measured: 32 tasks × 32 buckets =
@@ -1412,7 +1395,6 @@ def bucketed_star_tables(spark, sf_dir: str, n_buckets: int = 8):
     session-global ``outputOrdering`` flag caveat, same
     :func:`release_bucketed_order_tables` lifecycle."""
     import hashlib
-    import tempfile
 
     from ..sources import write_bucketed
 
@@ -1427,7 +1409,7 @@ def bucketed_star_tables(spark, sf_dir: str, n_buckets: int = 8):
             f"{sf_dir}:{n_buckets}:star".encode()
         ).hexdigest()[:8]
         name = f"dpp_orders_star_bko_{suffix}"
-        base = tempfile.mkdtemp(prefix="dpp_bko_star_")
+        base = _util.scratch_dir("dpp_bko_star_")
         o = load(spark, sf_dir, "orders")
         c = load(spark, sf_dir, "customer").select(
             "c_custkey", "c_mktsegment", "c_nationkey"
@@ -2616,53 +2598,32 @@ def window_cume_nth(spark, sf_dir):
     """,
 )
 def window_topk_per_group(spark, sf_dir):
-    """Top-3 per market segment via the zero-exchange local combiner.
+    """Top-3 orders per market segment: the broadcast customer join,
+    then ``row_number() <= 3``, as one statement.
 
-    c_mktsegment has 5 distinct values: a plain window over it would
-    funnel the whole orders table through 5 reducers (5 × 20 TB sorts
-    at the 100 TB design point).  local_topk_per_group combines each
-    scan partition down to its own top-3 per segment IN PLACE — the
-    fact table crosses no network — and ranks only the surviving
-    ~partitions × segments × k rows in the final window.  (The salted
-    two-phase operator, operators/skew.py:18, solves the same funnel
-    with a balanced phase-1 shuffle; it remains the choice when order
-    keys are computed expressions or combiner state would be large —
-    ``tests/test_skew.py`` pins both against each other.)"""
-    from ..operators.skew import local_topk_per_group
-
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    # dim-enrich join as one sql() statement (see agg_q1 build notes)
-    j = spark.sql(
+    c_mktsegment has 5 distinct values, so a window that sorted every
+    row on its segment's reducer would funnel the orders table through
+    5 tasks.  It does not: Spark's ``InferWindowGroupLimit`` plans a
+    ``WindowGroupLimit Partial`` below the one exchange (each scan
+    partition keeps its own top-3 per segment) and a ``Final`` above it,
+    so the exchange carries at most partitions × 5 × 3 rows — all in
+    the JVM, no Python worker.  The rule covers k up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000);
+    ``operators.skew`` says what to use above it.
+    ``tests/test_plans.py`` pins the Partial/Final pair."""
+    return spark.sql(
         """
-        SELECT /*+ BROADCAST(c) */ c_mktsegment, o_orderkey, o_totalprice
-        FROM {o} o JOIN {c} c ON o.o_custkey = c.c_custkey
+        SELECT c_mktsegment, o_orderkey, o_totalprice FROM (
+          SELECT /*+ BROADCAST(c) */ c_mktsegment, o_orderkey,
+                 o_totalprice,
+                 row_number() OVER (
+                     PARTITION BY c_mktsegment
+                     ORDER BY o_totalprice DESC, o_orderkey) AS rn
+          FROM {o} o JOIN {c} c ON o.o_custkey = c.c_custkey
+        ) WHERE rn <= 3
         """,
-        o=o, c=c,
-    )
-    return local_topk_per_group(
-        j,
-        ["c_mktsegment"],
-        [("o_totalprice", False), ("o_orderkey", True)],
-        3,
-    )
-
-
-def _window_topk_salted_reference(spark, sf_dir):
-    """The salted-operator form of window_topk_per_group, kept callable
-    for the equivalence test in tests/test_skew.py."""
-    from ..operators.skew import salted_topk_per_group
-
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    j = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
-        "c_mktsegment", "o_orderkey", "o_totalprice"
-    )
-    return salted_topk_per_group(
-        j,
-        ["c_mktsegment"],
-        [F.col("o_totalprice").desc(), F.col("o_orderkey")],
-        3,
+        o=load(spark, sf_dir, "orders"),
+        c=load(spark, sf_dir, "customer"),
     )
 
 
@@ -2834,12 +2795,10 @@ def sink_partition_overwrite(spark, sf_dir):
     The check re-reads the table after replacing partition 'F' with a
     modified half-batch and aggregates every partition — wiping or
     duplicating any partition breaks the hash."""
-    import tempfile
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="dpp_dynover_") + "/orders"
+    path = _util.scratch_dir("dpp_dynover_") + "/orders"
     orders.write.partitionBy("o_orderstatus").parquet(path)
     batch = (
         orders.filter(
@@ -2879,15 +2838,13 @@ def sink_python_datasource(spark, sf_dir):
     publishes a half-file), then the round-trip re-read aggregates
     back to the source values.  With the reader row this completes the
     custom-source/custom-sink story — no JVM code either way."""
-    import tempfile
-
     from ..sources.pyds import register_jsonl_sink
 
     register_jsonl_sink(spark)
     o = load(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") < 2000
     ).select("o_orderkey", "o_orderstatus")
-    path = tempfile.mkdtemp(prefix="dpp_pyds_sink_") + "/orders"
+    path = _util.scratch_dir("dpp_pyds_sink_") + "/orders"
     o.write.format("dpp_jsonl").option("path", path).mode("append").save()
     back = spark.read.json(path)
     return back.groupBy("o_orderstatus").agg(
@@ -2947,8 +2904,6 @@ def scan_csv_malformed(spark, sf_dir):
     bad-rows-at-scale discipline (FAILFAST kills a 100 TB ingest on
     one poisoned line; quarantine-and-audit doesn't, and the corrupt
     count is the audit)."""
-    import tempfile
-
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 1000)
     lines = o.select(
         F.when(
@@ -2960,7 +2915,7 @@ def scan_csv_malformed(spark, sf_dir):
         )
         .alias("value")
     )
-    path = tempfile.mkdtemp(prefix="dpp_csvbad_") + "/rows"
+    path = _util.scratch_dir("dpp_csvbad_") + "/rows"
     lines.write.mode("overwrite").text(path)
     back = spark.read.csv(
         path,
@@ -3468,10 +3423,8 @@ def scan_recursive_glob(spark, sf_dir):
     discovery, for lakes whose directory scheme is NOT key=value.
     Totals hash-checked against the source table, so a missed subdir
     or double-read file diverges immediately."""
-    import tempfile
-
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 3000)
-    base = tempfile.mkdtemp(prefix="dpp_rglob_")
+    base = _util.scratch_dir("dpp_rglob_")
     for status in [r[0] for r in o.select("o_orderstatus").distinct().collect()]:
         (
             o.filter(F.col("o_orderstatus") == status)
@@ -3606,12 +3559,10 @@ def scan_text_roundtrip(spark, sf_dir):
     table.  The fixture's documents are single-line by construction;
     a corpus with embedded newlines takes the `wholetext`/custom-
     delimiter options on the same reader."""
-    import tempfile
-
     key = ("text_stage", sf_dir)
     path = _TEXT_STAGE.get(key)
     if path is None:
-        path = tempfile.mkdtemp(prefix="dpp_text_")
+        path = _util.scratch_dir("dpp_text_")
         load(spark, sf_dir, "documents").select("text").write.mode(
             "overwrite"
         ).text(path)
@@ -3651,12 +3602,10 @@ def scan_jsonl_gzip_roundtrip(spark, sf_dir):
     (per-lang counts, char mass, an ORDER-pinned id digest) must match
     the original table exactly — one dropped or doubled line after
     the compress/decompress round-trip diverges the hash."""
-    import tempfile
-
     key = ("jsonl_gz_stage", sf_dir)
     path = _TEXT_STAGE.get(key)
     if path is None:
-        path = tempfile.mkdtemp(prefix="dpp_jsonlgz_")
+        path = _util.scratch_dir("dpp_jsonlgz_")
         load(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang"
         ).write.mode("overwrite").option("compression", "gzip").json(path)
@@ -3815,10 +3764,8 @@ def scan_file_metadata(spark, sf_dir):
     — with the partition value recovered FROM the file path, and a
     belt-and-braces guard that every row's ``file_size`` is positive.
     Oracle: the same rollup straight off the source table."""
-    import tempfile
-
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 4000)
-    path = tempfile.mkdtemp(prefix="dpp_meta_") + "/lake"
+    path = _util.scratch_dir("dpp_meta_") + "/lake"
     o.repartition("o_orderstatus").write.mode("overwrite").partitionBy(
         "o_orderstatus"
     ).parquet(path)

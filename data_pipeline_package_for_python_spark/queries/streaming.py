@@ -36,6 +36,7 @@ from ..streaming import (
     stream_stream_interval_join,
     tumbling_agg,
 )
+from ..operators._util import scratch_dir
 from ._registry import dsum, load, query
 
 
@@ -288,11 +289,9 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch parquet sink: filtered stream lands as parquet batch
     writes; re-reading the sink must equal the batch pipeline's answer."""
-    import tempfile
-
     from ..streaming import foreach_batch_parquet
 
-    out_dir = tempfile.mkdtemp(prefix="dpp_fb_sink_")
+    out_dir = scratch_dir("dpp_fb_sink_")
     foreach_batch_parquet(
         _stream(spark, sf_dir).filter(F.col("value") > 100),
         out_dir,
@@ -509,8 +508,6 @@ def stream_python_datasource_sink(
     closed-formula oracle checks the round-trip, completing the custom
     source/sink matrix (batch read + write, stream read + write — all
     pure Python, no JVM code)."""
-    import tempfile
-
     from ..sources.pyds import (
         register_jsonl_stream_sink,
         register_synth_stream,
@@ -519,7 +516,7 @@ def stream_python_datasource_sink(
 
     register_synth_stream(spark)
     register_jsonl_stream_sink(spark)
-    path = tempfile.mkdtemp(prefix="dpp_streamsink_") + "/out"
+    path = scratch_dir("dpp_streamsink_") + "/out"
     s = (
         spark.readStream.format("synthstream")
         .option("n", 934).option("batch_rows", 300).option("buckets", 8)
@@ -532,8 +529,12 @@ def stream_python_datasource_sink(
         lambda src: isinstance(src.get("endOffset"), dict)
         and src["endOffset"].get("i") == 934,
     )
-    back = spark.read.schema("bucket bigint, id bigint, val bigint").json(
-        path + "/*.jsonl"
+    # a pathGlobFilter, not a "/*.jsonl" path glob: on a glob Spark's
+    # FileStreamSink metadata probe logs a FileNotFoundException at WARN
+    back = (
+        spark.read.schema("bucket bigint, id bigint, val bigint")
+        .option("pathGlobFilter", "*.jsonl")
+        .json(path)
     )
     return back.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_rows"), F.sum("val").alias("val_sum")

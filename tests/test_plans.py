@@ -421,9 +421,79 @@ def test_cap_per_domain_two_phase_no_global_sort(spark, sf_dir):
     and group."""
     r = rep("etl_cap_per_domain", spark, sf_dir)
     assert r.joins == []
-    assert "Sort [" not in r.text.split("Window")[0] or True
-    # two window phases -> at most 3 exchanges (salt, group, output)
-    assert r.n_shuffles <= 3
+    # each key list ends with the partition count; keep the column names
+    keys = sorted(
+        [c.split("#")[0].strip() for c in k.split(",")[:-1]]
+        for k in r.shuffle_keys
+    )
+    assert keys == [["source"], ["source", "__salt"]], r.shuffle_keys
+    assert "SinglePartition" not in r.text
+
+
+def _final_plan_lines(df) -> list[str]:
+    """The executed (AQE final) physical plan, one node per line."""
+    df.collect()
+    text = df._jdf.queryExecution().executedPlan().toString()
+    return text.split("== Initial Plan ==")[0].splitlines()
+
+
+def test_window_topk_per_group_limits_before_the_exchange(spark, sf_dir):
+    """Spark's window group limit, not a hand-built phase: one exchange
+    on the segment, a Partial limit below it (each map partition ships
+    ≤ segments × 3 rows) and the Final one above it."""
+    lines = _final_plan_lines(
+        QUERIES["window_topk_per_group"].spark_fn(spark, sf_dir)
+    )
+    exchanges = [
+        i for i, ln in enumerate(lines)
+        if re.search(r"[+:]- (?!Broadcast)\w*Exchange ", ln)
+    ]
+    assert len(exchanges) == 1, lines
+    assert "hashpartitioning(c_mktsegment" in lines[exchanges[0]]
+
+    def limits(mode):
+        return [
+            i for i, ln in enumerate(lines)
+            if "WindowGroupLimit [" in ln and ln.rstrip().endswith(mode)
+        ]
+
+    # a plan prints parents above children: Final above the exchange,
+    # Partial below it
+    assert [i < exchanges[0] for i in limits("Final")] == [True], lines
+    assert [i > exchanges[0] for i in limits("Partial")] == [True], lines
+    # and the Partial limit reads the join output itself: only its
+    # required sort (and a projection) in between
+    partial = limits("Partial")[0]
+    join = next(
+        i for i, ln in enumerate(lines) if "BroadcastHashJoin" in ln
+    )
+    between = [
+        re.search(r"- (?:\*\(\d+\) )?(\w+)", ln).group(1)
+        for ln in lines[partial + 1:join]
+    ]
+    assert set(between) <= {"Sort", "Project"}, between
+
+
+_PYTHON_NODES = re.compile(
+    r"\b(MapInPandas|\w*MapInArrow|ArrowEvalPython|BatchEvalPython)\b"
+)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "join_q3_topk",
+        "join_star_q5",
+        "window_running_sum",
+        "window_topk_per_group",
+    ],
+)
+def test_relational_steps_run_no_python_operator(name, spark, sf_dir):
+    """These steps are JVM-only: a Python node in the plan would start a
+    Python daemon and worker that nothing else in such a pipeline uses."""
+    lines = _final_plan_lines(QUERIES[name].spark_fn(spark, sf_dir))
+    found = [ln.strip() for ln in lines if _PYTHON_NODES.search(ln)]
+    assert not found, found
 
 
 def test_filter_funnel_single_scan_no_joins(spark, sf_dir):

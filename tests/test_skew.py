@@ -1,7 +1,8 @@
 """Skew-mitigation operators: salted results must equal unsalted results.
 
 Salting changes the PHYSICAL distribution only — every test here asserts
-exact logical equivalence against the naive single-phase formulation.
+exact logical equivalence against the naive single-phase formulation;
+so do the ``topk_per_group`` tests, whose map-side limit Spark plans.
 """
 
 import pyspark.sql.functions as F
@@ -9,10 +10,22 @@ from pyspark.sql import Window
 
 from data_pipeline_package_for_python_spark.operators.skew import (
     explode_salt_join,
-    local_topk_per_group,
     salted_groupby_agg,
     salted_topk_per_group,
+    topk_per_group,
 )
+
+
+def _plain_topk(df, group_cols, order, k):
+    """The naive formulation: rank every row, keep rank ≤ k."""
+    w = Window.partitionBy(*group_cols).orderBy(*order)
+    return df.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= k
+    )
+
+
+def _rows(df, cols):
+    return sorted(map(tuple, df.select(*cols).collect()))
 
 
 def test_salted_topk_equals_plain_window(spark, tables):
@@ -28,26 +41,15 @@ def test_salted_topk_equals_plain_window(spark, tables):
     salted = salted_topk_per_group(
         j, ["c_mktsegment"], order, 3, salt_buckets=7
     )
-    w = Window.partitionBy("c_mktsegment").orderBy(*order)
-    plain = (
-        j.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .drop("rn")
-    )
+    plain = _plain_topk(j, ["c_mktsegment"], order, 3)
     key = ["c_mktsegment", "o_orderkey"]
-    assert sorted(map(tuple, salted.select(*key).collect())) == sorted(
-        map(tuple, plain.select(*key).collect())
-    )
+    assert _rows(salted, key) == _rows(plain, key)
     # schema passes through untouched (no leaked __salt/__rn columns)
     assert salted.columns == j.columns
 
 
-def test_local_topk_equals_salted_and_plain(spark, tables):
-    """The zero-exchange Arrow combiner, the salted two-phase operator
-    and the naive window must return identical rows; the combiner's
-    phase 1 must add no Exchange."""
-    from data_pipeline_package_for_python_spark import plans
-
+def test_topk_equals_plain_window(spark, tables):
+    """k smaller than every group: ~30 orders per segment at sf0.001."""
     j = (
         tables["orders"]
         .join(
@@ -57,25 +59,43 @@ def test_local_topk_equals_salted_and_plain(spark, tables):
         .select("c_mktsegment", "o_orderkey", "o_totalprice")
     )
     order = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
-    local = local_topk_per_group(
-        j, ["c_mktsegment"], [("o_totalprice", False), ("o_orderkey", True)], 3
+    out = topk_per_group(j, ["c_mktsegment"], order, 3)
+    assert _rows(out, j.columns) == _rows(
+        _plain_topk(j, ["c_mktsegment"], order, 3), j.columns
     )
-    salted = salted_topk_per_group(j, ["c_mktsegment"], order, 3)
-    key = ["c_mktsegment", "o_orderkey"]
-    assert sorted(map(tuple, local.select(*key).collect())) == sorted(
-        map(tuple, salted.select(*key).collect())
-    )
-    assert local.columns == j.columns
-    # one shuffle total: the survivors' final window — phase 1 is local.
-    assert plans.plan_report(local).n_shuffles == 1
+    assert out.count() == 15
 
 
-def test_local_topk_k_larger_than_group(spark, tables):
+def test_topk_k_larger_than_group(spark, tables):
     small = tables["nation"].select("n_regionkey", "n_name", "n_nationkey")
-    out = local_topk_per_group(
-        small, ["n_regionkey"], [("n_nationkey", True)], 100
+    order = [F.col("n_nationkey")]
+    out = topk_per_group(small, ["n_regionkey"], order, 100)
+    assert _rows(out, small.columns) == _rows(small, small.columns)
+
+
+def test_topk_computed_order_expression(spark, tables):
+    """Order keys may be expressions, not only column names."""
+    docs = tables["documents"].select("doc_id", "source")
+    order = [F.md5(F.col("doc_id").cast("string")), F.col("doc_id")]
+    out = topk_per_group(docs, ["source"], order, 4)
+    assert _rows(out, docs.columns) == _rows(
+        _plain_topk(docs, ["source"], order, 4), docs.columns
     )
-    assert out.count() == small.count()
+
+
+def test_topk_rank_col_is_the_row_number(spark, tables):
+    j = tables["orders"].select("o_orderstatus", "o_orderkey", "o_totalprice")
+    order = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
+    out = topk_per_group(j, ["o_orderstatus"], order, 5, rank_col="rank")
+    assert out.columns == j.columns + ["rank"]
+    plain = _plain_topk(j, ["o_orderstatus"], order, 5)
+    assert _rows(out, out.columns) == _rows(plain, plain.columns)
+
+
+def test_topk_leaves_no_helper_column(spark, tables):
+    j = tables["orders"].select("o_orderstatus", "o_orderkey")
+    out = topk_per_group(j, ["o_orderstatus"], [F.col("o_orderkey")], 2)
+    assert out.columns == j.columns
 
 
 def test_salted_topk_k_larger_than_group(spark, tables):
