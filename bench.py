@@ -179,37 +179,6 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # Opt-in prepared-statement column (VERDICT r9 #7): quantifies how
-    # much of each small-SF ratio is the per-build Catalyst/py4j
-    # front-end constant that BASELINE.md decomposes at 0.05–0.12 s.
-    # NEVER replaces the contract numbers above — it is an EXTRA field,
-    # and the driver (which leaves the env unset) never sees it.
-    prepared_sec: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_PREPARED"):
-        from data_pipeline_package_for_python_spark.plans.prepared import (
-            prepare,
-        )
-
-        for bid, names in BENCH_SET.items():
-            if ONLY and bid not in ONLY:
-                continue
-            p_total = 0.0
-            for name in names:
-                pq = prepare(QUERIES[name].spark_fn(spark, SF_DIR))
-                pq.dataframe().toPandas()  # warm-up, discarded
-                times = []
-                for _ in range(RUNS):
-                    t0 = time.perf_counter()
-                    pq.dataframe().toPandas()
-                    times.append(time.perf_counter() - t0)
-                p_total += statistics.median(times)
-            prepared_sec[bid] = round(p_total, 4)
-            print(
-                f"{bid}: prepared={p_total:.3f}s "
-                f"(vs fresh {spark_sec[bid]:.3f}s)",
-                file=sys.stderr,
-            )
-
     total = round(sum(spark_sec.values()), 4)
     out = {
         "metric": "bench_b1_b8_total_spark_median",
@@ -226,13 +195,6 @@ def main() -> None:
         "warmup_passes": warmup_passes,
         "env": session_env(spark),
     }
-    if prepared_sec:
-        out["prepared"] = prepared_sec
-        out["prepared_ratio"] = {
-            b: (round(prepared_sec[b] / duck_sec[b], 2)
-                if duck_sec.get(b) else None)
-            for b in prepared_sec
-        }
     print(json.dumps(out))
 
 

@@ -5,9 +5,6 @@ append/overwrite modes are exercised for real; no external server or
 extra jar needed.
 """
 
-import os
-import tempfile
-
 import pytest
 
 from data_pipeline_package_for_python_spark.sources import read_jdbc, write_jdbc
@@ -15,9 +12,8 @@ from data_pipeline_package_for_python_spark.sources import read_jdbc, write_jdbc
 DERBY_PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
 
-def _derby_url() -> str:
-    db = os.path.join(tempfile.mkdtemp(prefix="dpp_derby_t_"), "db")
-    return f"jdbc:derby:{db};create=true"
+def _derby_url(tmp_path) -> str:
+    return f"jdbc:derby:{tmp_path / 'db'};create=true"
 
 
 def test_read_jdbc_requires_bounds_with_partition_column(spark):
@@ -30,8 +26,8 @@ def test_read_jdbc_requires_bounds_with_partition_column(spark):
         )
 
 
-def test_jdbc_roundtrip_embedded_derby(spark, sf_dir):
-    url = _derby_url()
+def test_jdbc_roundtrip_embedded_derby(spark, sf_dir, tmp_path):
+    url = _derby_url(tmp_path)
     src = spark.read.parquet(f"{sf_dir}/region.parquet")
     write_jdbc(src, url, "region_t", mode="overwrite", properties=DERBY_PROPS)
     back = read_jdbc(spark, url, "region_t", properties=DERBY_PROPS)
@@ -40,10 +36,10 @@ def test_jdbc_roundtrip_embedded_derby(spark, sf_dir):
     )
 
 
-def test_jdbc_partitioned_parallel_read(spark, sf_dir):
+def test_jdbc_partitioned_parallel_read(spark, sf_dir, tmp_path):
     """The scale shape: bounds + numPartitions must produce N range
     predicates (N input partitions), same rows as the serial read."""
-    url = _derby_url()
+    url = _derby_url(tmp_path)
     src = spark.read.parquet(f"{sf_dir}/nation.parquet")
     write_jdbc(src, url, "nation_t", mode="overwrite", properties=DERBY_PROPS)
     part = read_jdbc(
@@ -56,8 +52,8 @@ def test_jdbc_partitioned_parallel_read(spark, sf_dir):
     assert part.count() == src.count()
 
 
-def test_jdbc_append_mode_accumulates(spark, sf_dir):
-    url = _derby_url()
+def test_jdbc_append_mode_accumulates(spark, sf_dir, tmp_path):
+    url = _derby_url(tmp_path)
     src = spark.read.parquet(f"{sf_dir}/region.parquet")
     write_jdbc(src, url, "acc_t", mode="overwrite", properties=DERBY_PROPS)
     write_jdbc(src, url, "acc_t", mode="append", properties=DERBY_PROPS)
